@@ -24,6 +24,18 @@ from autonomus_datapipeline_spark.engine.sandbox import (
 )
 
 
+def _local_sample(df: DataFrame, n_rows: int) -> DataFrame:
+    """The first ``n_rows`` of ``df`` as a ``LocalRelation``. The rows cross
+    to the driver JVM only: no Python round-trip, so every type (decimal,
+    timestamp, array, map, struct) keeps its exact value. Built on the JVM
+    side because ``spark.createDataFrame`` of Python rows yields an RDD-backed
+    relation, which still runs a job per use."""
+    jdf = df.limit(n_rows)._jdf
+    spark = df.sparkSession
+    local = spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema())
+    return DataFrame(local, spark)
+
+
 @dataclass
 class TransformStep:
     name: str
@@ -107,9 +119,14 @@ class TransformChain:
     def dry_run_all(
         self, sample_df: DataFrame, spark: SparkSession, n_rows: int = 10
     ) -> dict[str, DryRunResult]:
-        """Dry-run the whole chain on a real sample, threading outputs."""
+        """Dry-run the whole chain on a real sample, threading outputs.
+
+        The sample is collected ONCE and held as a driver-local relation, so
+        the source is scanned once per chain, not once per step, and
+        row-local steps (filters, projections) over it run locally, with no
+        Spark job at all."""
         results: dict[str, DryRunResult] = {}
-        df = sample_df.limit(n_rows)
+        df = _local_sample(sample_df, n_rows)
         for step in self.active_steps():
             res = dry_run(step.code, df, spark, n_rows)
             results[step.name] = res

@@ -15,6 +15,10 @@ reference: dag_generator.py:809-1157 master-chain semantics):
 - **Row-count metrics** come from ``df.observe`` — a zero-cost observation
   on the write job — instead of the reference's extra ``df.count()`` jobs
   before/after every layer (silver_service.py:80,129; SURVEY.md §4 item 2).
+- **Data-quality verdicts** of the row-level rules come from the same
+  observation: each rule's violation count is one more observed sum, so the
+  rules cost no job of their own. Only a failing rule's samples and the
+  ``unique`` rules read the written parquet back (engine/quality.py).
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ from pyspark.sql import functions as F
 
 from autonomus_datapipeline_spark.catalog import Catalog
 from autonomus_datapipeline_spark.engine.chain import StepMetric, TransformChain
+from autonomus_datapipeline_spark.engine.quality import SAMPLE_FAILURES, RuleChecks
 
 # Table-name guard (reference gold_service.py:29-39)
 _NAME_RE = re.compile(r"^[a-zA-Z_][a-zA-Z0-9_.]*$")
@@ -71,12 +76,13 @@ class Pipeline:
     def set_quality_rules(self, layer: str, rules: list) -> None:
         """Attach data-quality rules (engine.quality.DQRule) to a layer.
 
-        Rules run against the layer's WRITTEN output right after the write
-        (one aggregation pass for all row-level rules — engine/quality.py),
-        and the per-rule verdicts are recorded in the layer's catalog
-        metadata: the reference declared exactly this surface as its
-        ``data_quality_results`` table (db/init.sql:256-270) but never built
-        the evaluation engine."""
+        Row-level rules are counted over exactly the rows the layer writes,
+        as sums on the write's own ``Observation`` (no job of their own);
+        ``unique`` rules and a failing rule's samples read the written
+        parquet back (engine/quality.py). The per-rule verdicts are
+        recorded in the layer's catalog metadata: the reference declared
+        exactly this surface as its ``data_quality_results`` table
+        (db/init.sql:256-270) but never built the evaluation engine."""
         self._quality_rules[layer] = list(rules)
 
     # -- bronze ---------------------------------------------------------------
@@ -194,8 +200,9 @@ class Pipeline:
         (reference bronze_ingestion.py:120-176: each file read individually,
         failures skipped and reported, survivors unioned).
 
-        The per-file probe only touches metadata/first-bytes (schema read),
-        then all readable files go through ONE parallel multi-path scan —
+        The per-file probe only touches metadata/first-bytes (schema read;
+        CSV headers only, with type inference off), then all readable files
+        go through ONE parallel multi-path scan —
         not a driver-side union loop.
 
         ``per_file_accounting``: True forces the probe, False skips it; None
@@ -223,7 +230,9 @@ class Pipeline:
         readable: list[str] = []
         for f in files:
             try:
-                probe = type(source)(path=f, fmt=source.fmt, options=dict(source.options))
+                # Opening the file is the check: a header-only read, never a
+                # type-inference scan (the real read below infers once).
+                probe = type(source)(path=f, fmt=source.fmt, options=source.raw_options())
                 _ = probe.read(self.spark, schema=schema).schema
                 readable.append(f)
                 reports.append({"file": f, "status": "ok"})
@@ -247,21 +256,26 @@ class Pipeline:
         t0 = time.time()
         src = self.catalog.read(self.spark, source_layer, self.name)
         out, metrics = chain.execute(src, self.spark)
+        rules = self._quality_rules.get(layer, [])
+        checks = RuleChecks(rules)
+        # The row-level rules' violation sums ride on the write's own
+        # Observation, so they count exactly the rows written, in the write's
+        # single pass. The written parquet is read back (with the known
+        # schema) only for a failing rule's samples and for unique rules.
         obs = Observation(f"{layer}_{self.name}_{time.time_ns()}")
-        out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
+        out = out.observe(obs, F.count(F.lit(1)).alias("rows"), *checks.violation_sums())
         version = self.catalog.next_version(layer, self.name)
         path = self.catalog.data_path(layer, self.name, version)
         out.write.mode("overwrite").parquet(path)
-        rows = int(obs.get["rows"])
+        observed = obs.get
+        rows = int(observed["rows"])
         dq_results = []
         extra_meta = {}
-        rules = self._quality_rules.get(layer)
         if rules:
-            from autonomus_datapipeline_spark.engine.quality import evaluate_rules
-
-            # Evaluate on the parquet just written (not the in-memory df):
-            # the verdicts then cover the bytes downstream readers see.
-            dq_results = evaluate_rules(self.spark.read.parquet(path), rules)
+            dq_results = checks.results(
+                lambda: self.spark.read.schema(out.schema).parquet(path),
+                rows, observed, SAMPLE_FAILURES,
+            )
             extra_meta["quality"] = [
                 {
                     "rule_name": r.rule.name,

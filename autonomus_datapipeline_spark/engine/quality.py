@@ -7,17 +7,22 @@ the Spark-first implementation:
 
 - rule kinds: not_null, unique, in_range, matches_regex, accepted_values,
   freshness (max age of a timestamp column)
-- ALL rules are evaluated in ONE aggregation pass over the data (each rule
-  compiles to a conditional-count expression) — at 100 TB you cannot afford
-  a job per rule; uniqueness is the one exception (it needs its own groupBy)
-- per-rule failure counts + up to N sample failing rows
+- every row-level rule compiles to one conditional-count expression, and
+  all of them are computed in ONE pass — at 100 TB you cannot afford a job
+  per rule. ``evaluate_rules`` runs that pass as an aggregation over a
+  DataFrame; a pipeline layer (engine/pipeline.py) adds the same
+  expressions to the ``Observation`` on its write, so the verdicts cost no
+  pass of their own. Uniqueness is the one exception (it needs its own
+  groupBy over the data).
+- per-rule failure counts + up to N sample failing rows, read only for
+  rules that fail
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable, Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -40,7 +45,7 @@ class DQResult:
     failure_samples: list[dict] = field(default_factory=list)
 
 
-def _violation_predicate(rule: DQRule, now: _dt.datetime | None) -> Column:
+def _violation_predicate(rule: DQRule, now: _dt.datetime) -> Column:
     c = F.col(rule.column)
     if rule.kind == "not_null":
         return c.isNull()
@@ -58,58 +63,89 @@ def _violation_predicate(rule: DQRule, now: _dt.datetime | None) -> Column:
         return ~c.isin(*rule.config["values"]) | c.isNull()
     if rule.kind == "freshness":
         max_age_s = rule.config["max_age_seconds"]
-        ref = F.lit((now or _dt.datetime.now(tz=_dt.timezone.utc)).replace(tzinfo=None))
+        ref = F.lit(now.replace(tzinfo=None))
         return (F.unix_timestamp(ref) - F.unix_timestamp(c) > max_age_s) | c.isNull()
     raise ValueError(f"unknown rule kind {rule.kind!r}")
+
+
+SAMPLE_FAILURES = 5  # failing rows sampled per failing rule
+
+
+class RuleChecks:
+    """The compiled form of a rule list, shared by :func:`evaluate_rules` and
+    the pipeline's layer write.
+
+    Row-level rules become one violation sum each (:meth:`violation_sums`),
+    to be computed in a single pass: an aggregation over the data, or the
+    ``Observation`` a layer write already carries. :meth:`results` turns
+    those sums into verdicts. It touches data only to sample a failing
+    rule's rows and to run each ``unique`` rule's groupBy. ``now`` is fixed
+    once, so a freshness rule's sums and samples use the same reference
+    time."""
+
+    def __init__(self, rules: list[DQRule], now: _dt.datetime | None = None):
+        now = now or _dt.datetime.now(tz=_dt.timezone.utc)
+        self.row_rules = [r for r in rules if r.kind != "unique"]
+        self.uniq_rules = [r for r in rules if r.kind == "unique"]
+        self.preds = [_violation_predicate(r, now) for r in self.row_rules]
+
+    def violation_sums(self) -> list[Column]:
+        return [
+            F.sum(F.when(pred, 1).otherwise(0)).alias(f"__viol_{i}")
+            for i, pred in enumerate(self.preds)
+        ]
+
+    def results(
+        self,
+        data: Callable[[], DataFrame],
+        total: int,
+        sums: Mapping[str, Any],
+        sample_failures: int,
+    ) -> list[DQResult]:
+        """Verdicts in rule order: row-level rules, then ``unique`` rules.
+        ``sums`` maps each :meth:`violation_sums` alias to its value; ``data``
+        yields the evaluated rows and is called only when a failing rule
+        needs samples or a ``unique`` rule is present."""
+        results: list[DQResult] = []
+        for i, (r, pred) in enumerate(zip(self.row_rules, self.preds)):
+            n_fail = int(sums[f"__viol_{i}"] or 0)  # a sum over no rows is null
+            samples = []
+            if n_fail and sample_failures:
+                samples = [
+                    row.asDict(recursive=True)
+                    for row in data().filter(pred).limit(sample_failures).collect()
+                ]
+            results.append(DQResult(r, n_fail == 0, n_fail, total, samples))
+
+        for r in self.uniq_rules:
+            dupes = (
+                data().groupBy(r.column)
+                .agg(F.count(F.lit(1)).alias("n"))
+                .filter(F.col("n") > 1)
+            )
+            sample_rows = dupes.limit(sample_failures).collect()
+            n_dupe_keys = dupes.count()
+            results.append(
+                DQResult(
+                    r,
+                    n_dupe_keys == 0,
+                    n_dupe_keys,
+                    total,
+                    [row.asDict() for row in sample_rows],
+                )
+            )
+        return results
 
 
 def evaluate_rules(
     df: DataFrame,
     rules: list[DQRule],
-    sample_failures: int = 5,
+    sample_failures: int = SAMPLE_FAILURES,
     now: _dt.datetime | None = None,
 ) -> list[DQResult]:
     """Evaluate all rules; single aggregation job for row-level rules plus
     one groupBy per uniqueness rule and one bounded sample collect per
     failing rule."""
-    row_rules = [r for r in rules if r.kind != "unique"]
-    uniq_rules = [r for r in rules if r.kind == "unique"]
-
-    aggs = [F.count(F.lit(1)).alias("__total")]
-    preds: dict[str, Column] = {}
-    for i, r in enumerate(row_rules):
-        pred = _violation_predicate(r, now)
-        preds[r.name] = pred
-        aggs.append(F.sum(F.when(pred, 1).otherwise(0)).alias(f"__viol_{i}"))
-    counts = df.agg(*aggs).collect()[0] if row_rules else None
-    total = int(counts["__total"]) if counts is not None else df.count()
-
-    results: list[DQResult] = []
-    for i, r in enumerate(row_rules):
-        n_fail = int(counts[f"__viol_{i}"])
-        samples = []
-        if n_fail and sample_failures:
-            samples = [
-                row.asDict(recursive=True)
-                for row in df.filter(preds[r.name]).limit(sample_failures).collect()
-            ]
-        results.append(DQResult(r, n_fail == 0, n_fail, total, samples))
-
-    for r in uniq_rules:
-        dupes = (
-            df.groupBy(r.column)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-        )
-        sample_rows = dupes.limit(sample_failures).collect()
-        n_dupe_keys = dupes.count()
-        results.append(
-            DQResult(
-                r,
-                n_dupe_keys == 0,
-                n_dupe_keys,
-                total,
-                [row.asDict() for row in sample_rows],
-            )
-        )
-    return results
+    checks = RuleChecks(rules, now)
+    sums = df.agg(F.count(F.lit(1)).alias("__total"), *checks.violation_sums()).first()
+    return checks.results(lambda: df, int(sums["__total"]), sums, sample_failures)

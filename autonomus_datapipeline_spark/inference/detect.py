@@ -7,7 +7,9 @@ backend/app/services/schema_detection.py — files :439-604, Kafka sample
 - sample ≤1000 rows from the FIRST file (matching the reference's
   first-file sampling), via Spark with everything read as strings so the
   voting heuristics see raw values
-- validate every other file's column signature against the first
+- validate every other file's column signature against the first, from
+  column names alone: CSV headers are read without type inference, and the
+  first file's names come from its sample read
 - run the pure-function inference core + the 0.7/0.3 confidence formula
 - the same record-level path serves REST samples and any list[dict]
   (the Kafka-probe analog: sample N messages → infer)
@@ -52,23 +54,23 @@ def detect_file_schema(spark: SparkSession, source: FileSource) -> InferenceResu
     All columns are read as raw strings (no inferSchema) so the reference's
     threshold-voting heuristics decide the types — including the cases Spark
     inference gets differently (comma-separated integers, y/n booleans,
-    EU dates). Sampling one file of ≤1000 rows is O(1) at any corpus size.
+    EU dates). Sampling one file of ≤1000 rows is O(1) at any corpus size,
+    and the compatibility check reads only the other files' headers.
     """
     files = source.file_list()
     if not files:
         raise FileNotFoundError(f"no {source.fmt} files under {source.path}")
-    first_opts = dict(source.options)
-    if source.fmt == "csv":
-        first_opts["inferSchema"] = "false"  # raw strings for the type voting
-    first = FileSource(path=files[0], fmt=source.fmt, options=first_opts)
-    raw = first.read(spark)
+    first_opts = source.raw_options()  # raw strings for the type voting
+    raw = FileSource(path=files[0], fmt=source.fmt, options=first_opts).read(spark)
     sample_rows = [r.asDict(recursive=True) for r in raw.limit(SAMPLE_ROWS).collect()]
     fields = infer_dataframe_schema(sample_rows, raw.columns)
 
-    file_columns: dict[str, list[str]] = {}
-    for f in files:
-        fs = FileSource(path=f, fmt=source.fmt, options=dict(source.options))
-        file_columns[f] = fs.read(spark).columns
+    # Compatibility needs column names only: the first file's come from the
+    # read above, the others' from a header-only read of each.
+    file_columns = {files[0]: raw.columns}
+    for f in files[1:]:
+        header = FileSource(path=f, fmt=source.fmt, options=first_opts).read(spark)
+        file_columns[f] = header.columns
     compatible, incompatible = validate_multi_file(file_columns, files[0])
 
     return InferenceResult(

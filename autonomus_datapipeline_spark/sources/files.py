@@ -63,6 +63,15 @@ class FileSource:
             return [self.path]
         return discover_files(self.path, self.fmt)
 
+    def raw_options(self) -> dict[str, str]:
+        """The source's options with CSV type inference off: every column
+        reads as a string, and resolving the schema reads only the header
+        instead of scanning the file."""
+        opts = dict(self.options)
+        if self.fmt == "csv":
+            opts["inferSchema"] = "false"
+        return opts
+
     def _reader(self, spark: SparkSession, schema: T.StructType | None):
         reader = spark.read
         opts = {"header": "true", **self.options} if self.fmt == "csv" else dict(self.options)
