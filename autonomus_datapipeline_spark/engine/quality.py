@@ -124,7 +124,13 @@ class RuleChecks:
                 .filter(F.col("n") > 1)
             )
             sample_rows = dupes.limit(sample_failures).collect()
-            n_dupe_keys = dupes.count()
+            # A short sample already holds every duplicate key; only a full
+            # one needs the second shuffle to count the rest.
+            n_dupe_keys = (
+                dupes.count()
+                if len(sample_rows) == sample_failures
+                else len(sample_rows)
+            )
             results.append(
                 DQResult(
                     r,

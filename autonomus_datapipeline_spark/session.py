@@ -16,6 +16,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def get_spark(
@@ -39,6 +40,18 @@ def get_spark(
       defeated this; SURVEY.md §4).
     - partitionOverwriteMode=dynamic: layer rewrites only touch the partitions
       present in the incoming batch (reference: bronze_ingestion.py:55).
+    - codegen cache of CODEGEN_CACHE_ENTRIES generated classes: the session
+      is long-lived so that repeated plans reuse their compiled code, but
+      Spark's default cache holds 100 classes and one pass over perfbench's
+      8 ``registry_mix`` queries compiles about 280, so LRU eviction dropped
+      each class before the next pass reached it. Measured on 4 cores, 4–6
+      passes per session, two or three sessions per size: after the cold
+      pass, a pass compiled 271–278 classes at 100 entries, 0–20 at 500 and
+      2–26 at 2000, and its median wall was 5.6–7.4 s at 100, 4.8–6.0 s at
+      500 and 4.5–5.1 s at 2000. Peak RSS ranged 3.8–5.6 GB at every size:
+      the spread of JVM heap growth hides the cached classes' metaspace.
+      2000 holds several such working sets, so one session can interleave
+      the registry with the medallion layers without evicting either.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -61,6 +74,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if extra_conf:
         for k, v in extra_conf.items():

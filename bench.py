@@ -29,11 +29,20 @@ that boundary (measured ~+12% honest-cold vs the old methodology).
 Methodology (r15): per-query stall gate. The r14 driver runs were
 contaminated by host-level burst stalls that inflate one query's runs
 (7.1/13.9/32.6 s) without moving any canary checkpoint; a query whose runs
-show that signature (see SPREAD_GATE) is re-timed once immediately and the
-smaller median wins. The sidecar additionally surfaces every per-query MIN
+show that signature (see SPREAD_GATE) is re-timed once immediately. The
+gate is applied to the rerun as well (`rerun_stalled` in `spread_rerun`):
+a clean rerun's median replaces the stalled one, and when both passes
+stall the first pass's median is kept, never the lower of two untrusted
+medians. The sidecar additionally surfaces every per-query MIN
 (`queries_min`) and their sum (`min_sum`, also on the stdout line) as the
 noise-robust secondary wall. Additions only: `value` remains the
 median-of-n_runs sum, and no existing key changed meaning.
+
+Per-query codegen compiles: every query's detail carries
+`codegen_compiles`, the Janino compilations of each completed timed run,
+i.e. the generated classes the run found no cached copy of. The
+first run usually pays the query's cold compiles; later runs show whether
+the session's codegen cache kept them.
 
 The stdout JSON line is kept under ~1900 chars (the driver records a
 2000-char stdout tail) by listing only the slowest queries; the COMPLETE
@@ -52,6 +61,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from autonomus_datapipeline_spark.session import get_spark  # noqa: E402
+from autonomus_datapipeline_spark.telemetry import codegen_compiles  # noqa: E402
 from autonomus_datapipeline_spark.workloads import QUERY_REGISTRY  # noqa: E402
 
 REPO_DIR = os.path.dirname(os.path.abspath(__file__))
@@ -100,8 +110,8 @@ CANARY_DRIFT = 1.25
 # re-measure. A query whose runs show max/min > SPREAD_GATE *and* an
 # inflated median (median/min > SPREAD_MEDIAN, absolute inflation >
 # SPREAD_MIN_ABS seconds — tail queries' 0.1 s jitter is not weather) is
-# re-timed ONCE immediately and the smaller median wins (stalls only ever
-# inflate). Per-query `min` is additionally surfaced in the sidecar
+# re-timed ONCE immediately; the rerun's median is kept only if the rerun
+# shows no stall itself (see _time_query). Per-query `min` is additionally surfaced in the sidecar
 # (`queries_min`) and summed as `min_sum` on the stdout line — the
 # noise-robust secondary wall every r14 A/B already used. Additions only:
 # `value` stays the median sum, methodology and JSON contract unchanged.
@@ -207,26 +217,33 @@ def _mp_canary(nproc: int = 8) -> float:
     return round(best, 4)
 
 
-def _time_query(spark, name: str, sf_dir: str, n_runs: int) -> dict:
-    """Median-of-n_runs timing for one query, stall-gated (r15): when the
-    runs show the burst-stall signature (see the SPREAD_GATE comment), the
-    query is re-timed once immediately and the smaller median is kept; the
-    reported `min` spans ALL runs of both passes (every run is a complete
-    cache-cold execution, so more samples only sharpen the min)."""
-    first = _time_runs(spark, name, sf_dir, n_runs)
-    ok = [t for t in first["runs"] if t >= 0]
-    stalled = (
+def _stalled(timing: dict, n_runs: int) -> bool:
+    """The burst-stall signature of one timing pass (see SPREAD_GATE)."""
+    ok = [t for t in timing["runs"] if t >= 0]
+    return (
         len(ok) == n_runs
         and n_runs > 1
         and min(ok) > 0
         and max(ok) > SPREAD_GATE * min(ok)
-        and first["median"] > SPREAD_MEDIAN * min(ok)
-        and first["median"] - min(ok) > SPREAD_MIN_ABS
+        and timing["median"] > SPREAD_MEDIAN * min(ok)
+        and timing["median"] - min(ok) > SPREAD_MIN_ABS
     )
-    if not stalled:
+
+
+def _time_query(spark, name: str, sf_dir: str, n_runs: int) -> dict:
+    """Median-of-n_runs timing for one query, stall-gated (r15): when the
+    runs show the burst-stall signature (see the SPREAD_GATE comment), the
+    query is re-timed once immediately. A clean rerun is kept; a rerun that
+    errors or stalls too leaves the first pass in place, so the kept median
+    always comes from one pass and never from the lower of two untrusted
+    ones. The reported `min` spans ALL runs of both passes (every run is a
+    complete cache-cold execution, so more samples only sharpen the min)."""
+    first = _time_runs(spark, name, sf_dir, n_runs)
+    if not _stalled(first, n_runs):
         return first
     redo = _time_runs(spark, name, sf_dir, n_runs)
-    kept = redo if 0 <= redo["median"] < first["median"] else first
+    rerun_stalled = _stalled(redo, n_runs)
+    kept = redo if redo["median"] >= 0 and not rerun_stalled else first
     out = dict(kept)
     mins = [d["min"] for d in (first, redo) if d["min"] >= 0]
     out["min"] = min(mins) if mins else -1.0
@@ -235,6 +252,7 @@ def _time_query(spark, name: str, sf_dir: str, n_runs: int) -> dict:
         "first_median": first["median"],
         "rerun_runs": redo["runs"],
         "rerun_median": redo["median"],
+        "rerun_stalled": rerun_stalled,
         "kept": out["median"],
     }
     return out
@@ -247,6 +265,7 @@ def _time_runs(spark, name: str, sf_dir: str, n_runs: int) -> dict:
     import tempfile
 
     runs: list[float] = []
+    compiles: list[int] = []
     for _ in range(n_runs):
         spark.catalog.clearCache()
         # Warehouse setup/teardown happens OUTSIDE the timed window: mkdtemp
@@ -259,6 +278,7 @@ def _time_runs(spark, name: str, sf_dir: str, n_runs: int) -> dict:
             if name == "medallion_e2e_orders"
             else None
         )
+        c0 = codegen_compiles(spark)
         t0 = time.time()
         try:
             if warehouse is not None:
@@ -266,6 +286,7 @@ def _time_runs(spark, name: str, sf_dir: str, n_runs: int) -> dict:
             else:
                 QUERY_REGISTRY[name].fn(spark, sf_dir).count()
             runs.append(round(time.time() - t0, 3))
+            compiles.append(codegen_compiles(spark) - c0)
         except Exception as exc:  # noqa: BLE001
             print(f"bench error in {name}: {exc}", file=sys.stderr)
             runs.append(-1.0)
@@ -276,6 +297,7 @@ def _time_runs(spark, name: str, sf_dir: str, n_runs: int) -> dict:
     ok = [t for t in runs if t >= 0]
     return {
         "runs": runs,
+        "codegen_compiles": compiles,
         "median": round(statistics.median(ok), 3) if ok else -1.0,
         "min": min(ok) if ok else -1.0,
         "max": max(ok) if ok else -1.0,

@@ -197,6 +197,40 @@ def test_layer_dq_on_empty_write(spark, tmp_path):
     assert silver.quality_passed and silver.row_count == 0
 
 
+def test_unique_rule_on_clean_data_runs_one_groupby(spark):
+    """A ``unique`` rule whose sample comes back short already knows every
+    duplicate key, so it runs its groupBy once: 2 jobs for the row-level
+    aggregate (AQE: shuffle-map, result) and 2 for the duplicate sample.
+    Counting the duplicates again would add another shuffle of the data."""
+    df = spark.range(1000).withColumnRenamed("id", "k")
+    rules = [DQRule("k_unique", "unique", "k")]
+    results, jobs = _jobs_in_group(spark, "dq-unique-clean",
+                                   lambda: evaluate_rules(df, rules))
+    assert jobs == 4
+    assert [(r.passed, r.failure_count, r.total_count) for r in results] == [(True, 0, 1000)]
+
+
+def test_unique_rule_counts_with_and_without_duplicates(spark):
+    """The duplicate-key count is the sample's length when the sample is
+    short, and a full count otherwise (a full sample, or none requested)."""
+    def verdict(n_dupe_keys: int, sample_failures: int = SAMPLE_FAILURES):
+        # keys 0..n_dupe_keys-1 appear twice, the next 20 keys once
+        keys = [*range(n_dupe_keys), *range(n_dupe_keys + 20)]
+        df = spark.createDataFrame([(k,) for k in keys], "k int")
+        (r,) = evaluate_rules(df, [DQRule("k_unique", "unique", "k")], sample_failures)
+        return r.passed, r.failure_count, r.total_count, sorted(
+            (s["k"], s["n"]) for s in r.failure_samples)
+
+    assert verdict(0) == (True, 0, 20, [])
+    assert verdict(3) == (False, 3, 26, [(k, 2) for k in range(3)])
+    assert verdict(SAMPLE_FAILURES) == (
+        False, SAMPLE_FAILURES, 20 + 2 * SAMPLE_FAILURES,
+        [(k, 2) for k in range(SAMPLE_FAILURES)])
+    passed, n, total, samples = verdict(12)
+    assert (passed, n, total, len(samples)) == (False, 12, 44, SAMPLE_FAILURES)
+    assert verdict(7, sample_failures=0) == (False, 7, 34, [])
+
+
 # -- dry runs over the driver-local sample ------------------------------------
 
 _TYPED = T.StructType([

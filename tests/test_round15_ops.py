@@ -58,14 +58,34 @@ class TestBenchSpreadGate:
         assert sr["first_median"] == 13.9
         assert sr["rerun_median"] == 7.2
         assert sr["kept"] == 7.2
+        assert sr["rerun_stalled"] is False
 
     def test_rerun_also_stalled_keeps_smaller_median(self, monkeypatch):
         out, n_calls = self._run(
             monkeypatch, [[7.1, 13.9, 32.6], [8.0, 20.0, 41.0]]
         )
         assert n_calls == 2
-        assert out["median"] == 13.9  # first pass wins: smaller median
+        assert out["median"] == 13.9  # first pass wins: the rerun stalled too
         assert out["min"] == 7.1
+
+    def test_rerun_stalled_with_lower_median_keeps_first_pass(self, monkeypatch):
+        # Both passes show the stall signature: neither median is trusted,
+        # so the lower one is not picked; the first pass stands.
+        out, n_calls = self._run(
+            monkeypatch, [[7.1, 13.9, 32.6], [5.0, 11.0, 30.0]]
+        )
+        assert n_calls == 2
+        assert out["median"] == 13.9
+        assert out["runs"] == [7.1, 13.9, 32.6]
+        assert out["min"] == 5.0  # min still spans both passes
+        sr = out["spread_rerun"]
+        assert sr["rerun_stalled"] is True
+        assert sr["rerun_median"] == 11.0 and sr["kept"] == 13.9
+
+    def test_errored_rerun_keeps_first_pass(self, monkeypatch):
+        out, _ = self._run(monkeypatch, [[7.1, 13.9, 32.6], [-1.0]])
+        assert out["median"] == 13.9
+        assert out["spread_rerun"]["rerun_stalled"] is False
 
     def test_benign_first_run_codegen_spike_does_not_rerun(self, monkeypatch):
         # max/min 2.9x but the median sits on the warm runs: median-of-3
