@@ -66,27 +66,34 @@ def _audit_clamp_rate(df: DataFrame, bucket_key: Column, lo: float, hi: float) -
     if os.environ.get(CLAMP_AUDIT_ENV, "") != "1":
         return
     kd = bucket_key.try_cast("double")
+    # A non-null key that does not cast to double lands in the -2 sentinel
+    # bucket (_bucket_expr) — one bucket for all of them, so it clamps too.
+    uncastable = bucket_key.isNotNull() & kd.isNull()
+    outside = kd.isNotNull() & ((kd < F.lit(lo)) | (kd > F.lit(hi)))
     row = df.agg(
-        F.sum(
-            F.when(kd.isNotNull() & ((kd < F.lit(lo)) | (kd > F.lit(hi))), 1).otherwise(0)
-        ).alias("n_clamped"),
+        F.sum(F.when(outside | uncastable, 1).otherwise(0)).alias("n_clamped"),
+        F.sum(F.when(uncastable, 1).otherwise(0)).alias("n_uncastable"),
         F.count(F.lit(1)).alias("n_rows"),
     ).collect()[0]
     LAST_CLAMP_AUDIT = {
         "n_clamped": int(row["n_clamped"] or 0),
+        "n_uncastable": int(row["n_uncastable"] or 0),
         "n_rows": int(row["n_rows"]),
         "bounds": (lo, hi),
     }
     if LAST_CLAMP_AUDIT["n_clamped"]:
         _LOG.warning(
             "prefix_sum bounds=(%s, %s): %d of %d rows fall outside the "
-            "envelope and clamp into the edge buckets — values are "
-            "unaffected but load balance degrades; re-derive the envelope "
-            "constants for this deployment's data.",
+            "envelope and clamp into the edge buckets (%d of them are keys "
+            "that do not cast to double and share one sentinel bucket) — "
+            "values are unaffected but load balance degrades; re-derive "
+            "the envelope constants or the bucket key for this "
+            "deployment's data.",
             lo,
             hi,
             LAST_CLAMP_AUDIT["n_clamped"],
             LAST_CLAMP_AUDIT["n_rows"],
+            LAST_CLAMP_AUDIT["n_uncastable"],
         )
 
 __all__ = [

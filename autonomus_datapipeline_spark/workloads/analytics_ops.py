@@ -792,15 +792,8 @@ def copurchase_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     run before any graph algorithm (skew in this histogram predicts hot
     keys in the PageRank/CC shuffles; cf. operators/skew.py for the
     mitigation). All-integer, two map-side-combinable aggregates."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    a = op.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
-    b = op.select(F.col("l_orderkey").alias("ok2"), F.col("l_partkey").alias("dst"))
-    e0 = (
-        a.join(b, (a.ok == b.ok2) & (F.col("src") != F.col("dst")))
-        .select("src", "dst")
-        .distinct()
-    )
+    # the shared builder's distinct sees only the src < dst half-pairs
+    e0 = graph_common.copurchase_edges(spark, sf_dir, load=load_table)
     deg = e0.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     return (
         deg.groupBy(F.col("deg").alias("degree"))
@@ -1516,15 +1509,7 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     are node-count-sized); the statistics aggregate is map-side
     combinable.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    a = op.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
-    b = op.select(F.col("l_orderkey").alias("ok2"), F.col("l_partkey").alias("dst"))
-    e0 = (
-        a.join(b, (a.ok == b.ok2) & (F.col("src") != F.col("dst")))
-        .select("src", "dst")
-        .distinct()
-    )
+    e0 = graph_common.copurchase_edges(spark, sf_dir, load=load_table)
     deg = e0.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     da = deg.select(F.col("src"), F.col("deg").alias("x"))
     db = deg.select(F.col("src").alias("dst"), F.col("deg").alias("y"))

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from autonomus_datapipeline_spark.operators.prefix_sum import with_global_running
+from autonomus_datapipeline_spark.workloads.graph_common import copurchase_half_pairs
 from autonomus_datapipeline_spark.workloads.registry import (
     load_table,
     materialize_input,
@@ -426,10 +427,9 @@ def robust_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     and every downstream shuffle moves |distinct values| rows instead of
     |events|. The outlier/row accounting re-weights by the histogram
     count, so all four output columns are exactly the raw-row numbers
-    (oracle-pinned). The pre-r15 raw-rank form is kept below for the
-    interleaved A/B (tools/ab_r15.py)."""
-    if _MAD_FORM == "rawrank":
-        return _robust_outlier_mad_rawrank(spark, sf_dir)
+    (oracle-pinned). The pre-r15 raw-rank form lost the interleaved A/B
+    (AB_r15_madhist.json: median 2.73 vs 4.55 s) and was retired
+    (OPTIMIZATION_r15.md, "Retired after r15")."""
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     hist = materialize_input(
         ev.groupBy("event_type", "value").agg(
@@ -483,62 +483,6 @@ def robust_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(
                     F.col("adev") > _MAD_K * F.col("mad"), F.col("cc")
                 ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_outliers"),
-        )
-    )
-
-
-# r15 A/B switch: "hist" (default) = count-weighted histogram form above;
-# tools/ab_r15.py flips to "rawrank" in-session to re-measure the pre-r15
-# shape under identical weather.
-_MAD_FORM = "hist"
-
-
-def _robust_outlier_mad_rawrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-r15 raw-row rank form (kept for the interleaved A/B)."""
-    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    # Per-type distributed rank (bucket-parallel within each of the few
-    # event types — a type-partitioned window would sort |events|/|types|
-    # rows per single task). Rank ties among equal values are
-    # order-arbitrary in both shapes and cannot change the selected
-    # median (min-when picks by value).
-    r = with_global_running(
-        ev, [("value", True)], row_number="rk", total_count="n",
-        partition_by=["event_type"],
-    )
-    # Deliberately NOT cache()d even though `d` re-reads it from several
-    # subplans: caching this |types|-sized aggregate measured 2× SLOWER
-    # cold (5.1 vs 2.5 s at sf0.1) — the InMemoryRelation pin blocks AQE
-    # replanning of the broadcast joins that consume it, which costs far
-    # more than re-running the map-side-combinable agg.
-    med = r.groupBy("event_type").agg(
-        F.min(F.when(2 * F.col("rk") >= F.col("n") + 1, F.col("value"))).alias(
-            "med"
-        )
-    )
-    d = ev.join(F.broadcast(med), "event_type").withColumn(
-        "adev", F.abs(F.col("value") - F.col("med"))
-    )
-    d2 = with_global_running(
-        d, [("adev", True)], row_number="ark", total_count="n",
-        partition_by=["event_type"],
-    )
-    mad = d2.groupBy("event_type").agg(
-        F.min(F.when(2 * F.col("ark") >= F.col("n") + 1, F.col("adev"))).alias(
-            "mad"
-        )
-    )
-    return (
-        d.join(F.broadcast(mad), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("med").alias("median_value"),
-            F.min("mad").alias("mad"),
-            F.sum(
-                F.when(F.col("adev") > _MAD_K * F.col("mad"), 1).otherwise(0)
             )
             .cast("bigint")
             .alias("n_outliers"),
@@ -642,20 +586,11 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. The pair aggregate shuffles on (part, part) — catalog²-bounded,
     not fact-bounded — and the top-k is TakeOrdered with a (count, pair)
     total order."""
-    op = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = op.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a")
-    )
-    b = op.select(
-        F.col("l_orderkey").alias("ok2"), F.col("l_partkey").alias("part_b")
+    half = copurchase_half_pairs(
+        load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     )
     return (
-        a.join(b, (a.ok == b.ok2) & (F.col("part_b") > F.col("part_a")))
-        .groupBy("part_a", "part_b")
+        half.groupBy(F.col("src").alias("part_a"), F.col("dst").alias("part_b"))
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .orderBy(F.desc("n_orders"), "part_a", "part_b")
         .limit(_COP_TOP)

@@ -29,6 +29,7 @@ from autonomus_datapipeline_spark.operators.prefix_sum import (
     with_global_running,
     with_global_shift,
 )
+from autonomus_datapipeline_spark.workloads.graph_common import copurchase_half_pairs
 from autonomus_datapipeline_spark.workloads.registry import (
     descale6,
     ORDERDATE_EPOCH_DAY_BOUNDS,
@@ -423,15 +424,16 @@ def market_basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     in parts. The ordered key constraints (b > a, c > b) emit each triple
     exactly once.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    a = op.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a"))
-    b = op.select(F.col("l_orderkey").alias("ok2"), F.col("l_partkey").alias("part_b"))
-    c = op.select(F.col("l_orderkey").alias("ok3"), F.col("l_partkey").alias("part_c"))
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    c = li.distinct().select(
+        F.col("l_orderkey").alias("ok3"), F.col("l_partkey").alias("part_c")
+    )
     tri = (
-        a.join(b, (a.ok == b.ok2) & (F.col("part_b") > F.col("part_a")))
-        .join(c, (a.ok == c.ok3) & (F.col("part_c") > F.col("part_b")))
-        .groupBy("part_a", "part_b", "part_c")
+        copurchase_half_pairs(li)
+        .join(c, (F.col("ok") == F.col("ok3")) & (F.col("part_c") > F.col("dst")))
+        .groupBy(
+            F.col("src").alias("part_a"), F.col("dst").alias("part_b"), "part_c"
+        )
         .agg(F.count(F.lit(1)).cast("bigint").alias("support"))
         .where(F.col("support") >= _TRI_MIN_SUPPORT)
     )

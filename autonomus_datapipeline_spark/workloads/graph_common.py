@@ -1,10 +1,16 @@
-"""Shared co-purchase edge-list builder for the graph workload family.
+"""Shared co-purchase pair builder for the graph and basket workload family.
 
-pagerank_copurchase, label_propagation_communities, lpa_modularity_score and
-kcore_peeling_summary all operate on the same projected part-part graph
-(parts co-purchased within an order). Each query builds it fresh — a
-registered query must be self-contained — but they share THIS code path so
-the construction is written (and optimized) once.
+Parts co-purchased within an order form a projected part-part graph. Each
+registered query builds it fresh (a query must be self-contained), but the
+within-order pair fan-out is written once, here:
+
+- ``copurchase_half_pairs`` emits the (order, src, dst) half-pairs with
+  src < dst. copurchase_pairs, market_basket_lift and
+  market_basket_triples aggregate them into support counts directly;
+- ``copurchase_edges`` turns them into the symmetric distinct edge list
+  that pagerank_copurchase, label_propagation_communities,
+  lpa_modularity_score, kcore_peeling_summary, the degree histogram and
+  assortativity, BFS and Adamic-Adar iterate over.
 
 Construction shape, chosen by measurement at sf0.1:
 
@@ -30,8 +36,6 @@ persisted table."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -39,32 +43,25 @@ from collections.abc import Callable
 
 from autonomus_datapipeline_spark.workloads.registry import load_table
 
-# Production form. tools/ab_bench.py flips this to False to re-measure the
-# r10 no-pre-distinct variant; values are identical either way (the
-# post-join (src, dst) distinct dedupes exactly). Only consulted by the
-# legacy "join" builder (below).
-_EDGE_PRE_DISTINCT = True
 
-# r14 A/B switch: "collect" = per-order collect_set + array pair expansion
-# (2 exchanges, no join); "join" = the r11 self-join form (the distinct's
-# exchange + 2 join re-keys + SortMergeJoin). Same edge set either way —
-# proven by exceptAll in both directions at sf0.001/sf0.01 and by the
-# registry oracle gate on every consumer.
-#
-# Default stays "join": two interleaved canary-bracketed A/Bs
-# (AB_r14_edges.json, 3+4 pairs) measured the collect form NET SLOWER
-# over the six consumer queries (sum of per-query minima 27.9 s join vs
-# 31.7 s collect; medians agree) despite its fewer exchanges — the
-# collect build concentrates the C(k,2) pair fan-out into the handful of
-# AQE-coalesced post-groupBy partitions (2-4 tasks on this 32-core box:
-# the fan-out stage is CPU-dense but its INPUT shuffle is only a few MB,
-# so size-based coalescing starves it), while the join form spreads pair
-# generation across the SortMergeJoin's wider partitioning. The guide
-# §1.1 gotcha in the flesh: the "ideal" fewer-shuffle plan loses to the
-# measured one. Kept selectable for re-measurement on real clusters
-# (where the fan-out shuffle is GBs and AQE would never coalesce below
-# core count) via SPARK_GRAFT_EDGE_BUILD=collect.
-_EDGE_BUILD = os.environ.get("SPARK_GRAFT_EDGE_BUILD", "join")
+def copurchase_half_pairs(op: DataFrame) -> DataFrame:
+    """Within-order part half-pairs (ok, src, dst) with src < dst from an
+    already-loaded (l_orderkey, l_partkey) frame: Σ C(k, 2) rows over the
+    k distinct parts of each order.
+
+    Takes a DataFrame rather than (spark, sf_dir) so each caller loads
+    through its own module's ``load_table`` (see ``copurchase_edges``).
+
+    The per-(order, part) pre-distinct is measured, not incidental: r10
+    dropped it and the interleaved 2×2 A/B (AB_r11.json) traced the
+    co-purchase family's r10 regression to the drop (full LPA 5.05 s
+    without it vs 4.08 s with it)."""
+    op = op.distinct()
+    a = op.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
+    b = op.select(F.col("l_orderkey").alias("ok2"), F.col("l_partkey").alias("dst"))
+    return a.join(b, (a.ok == b.ok2) & (F.col("src") < F.col("dst"))).select(
+        "ok", "src", "dst"
+    )
 
 
 def copurchase_edges(
@@ -72,7 +69,7 @@ def copurchase_edges(
     sf_dir: str,
     with_degrees: bool = False,
     load: Callable[[SparkSession, str, str], DataFrame] | None = None,
-    build: str | None = None,
+    build: str = "join",
 ) -> DataFrame:
     """Symmetric distinct part-part co-purchase edge list (src, dst[, deg]),
     eagerly materialized. ``deg`` is the degree of ``src`` (= distinct
@@ -82,18 +79,25 @@ def copurchase_edges(
     through (tests monkeypatch that binding to inject synthetic graphs —
     resolving it here would silently bypass the patch).
 
-    ``build`` pins the construction form for ONE call site ("join" /
-    "collect"); None falls back to the module default (_EDGE_BUILD). r15:
-    kcore_peeling_summary and pagerank_copurchase pin "collect" — across
-    four independent interleaved A/Bs (AB_r14_edges.json, AB_r15_edges.json,
-    AB_r15_edges_kcore_pr.json) those two consumers are consistently
-    20-25% / 10% faster on the collect build while lpa/label_prop/bfs
-    consistently prefer "join"; the per-query pattern is stable under
-    different box weather, so the choice is pinned per consumer rather
-    than globally."""
+    ``build`` picks the construction form per call site. "join" (the
+    default) distincts ``copurchase_half_pairs``' self-join output; the
+    distinct sees only half the ordered pairs. "collect" folds each
+    order's parts into one sorted array and expands the half-pairs from
+    it: 2 exchanges instead of the join form's 3, same edge set. Two
+    interleaved A/Bs (AB_r14_edges.json, 3+4 pairs) measured "collect" NET
+    SLOWER over the six consumers (sum of per-query minima 27.9 s join vs
+    31.7 s collect): its C(k,2) fan-out runs in the handful of
+    AQE-coalesced post-groupBy partitions (2-4 tasks; the input shuffle
+    is only a few MB), while the join form spreads pair generation across
+    the SortMergeJoin's wider partitioning. But kcore_peeling_summary and
+    pagerank_copurchase were consistently 20-25% / 10% faster on
+    "collect" across four independent A/Bs (AB_r14_edges.json,
+    AB_r15_edges.json, AB_r15_edges_kcore_pr.json) while lpa/label_prop/
+    bfs preferred "join"; the per-query pattern held under different box
+    weather, so those two consumers pin "collect"."""
     li = (load or load_table)(spark, sf_dir, "lineitem")
     op = li.select("l_orderkey", "l_partkey")
-    if (build or _EDGE_BUILD) == "collect":
+    if build == "collect":
         # r14 (guide §2.4, remove shuffles outright): fold each order's
         # distinct parts into ONE sorted array (collect_set dedups, so no
         # pre-distinct pass), then emit the x < y half-pairs with a narrow
@@ -143,28 +147,7 @@ def copurchase_edges(
             .distinct()
         )
     else:
-        # Per-(order, part) pre-distinct RESTORED (r11): r10 dropped it on
-        # the "one fewer fact shuffle" argument, but the interleaved
-        # canary-normalized 2×2 A/B (tools/ab_bench.py, AB_r11.json)
-        # measured the drop as the real cause of the co-purchase family's
-        # r10 bench regression — full LPA 5.05 s without the pre-distinct
-        # vs 4.08 s with it at stable load. The pre-distinct's aggregate
-        # shrinks and ALREADY HASH-CLUSTERS the self-join input, which
-        # more than pays for its own exchange on this join's key
-        # distribution.
-        if _EDGE_PRE_DISTINCT:
-            op = op.distinct()
-        a = op.select(
-            F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src")
-        )
-        b = op.select(
-            F.col("l_orderkey").alias("ok2"), F.col("l_partkey").alias("dst")
-        )
-        half = (
-            a.join(b, (a.ok == b.ok2) & (F.col("src") < F.col("dst")))
-            .select("src", "dst")
-            .distinct()
-        )
+        half = copurchase_half_pairs(op).select("src", "dst").distinct()
     edges = half.select(
         F.explode(
             F.array(

@@ -35,6 +35,7 @@ from autonomus_datapipeline_spark.workloads.pipeline_ops import (
     _sql_shingles,
 )
 from autonomus_datapipeline_spark.operators.text import _e4_half_up
+from autonomus_datapipeline_spark.workloads.graph_common import copurchase_half_pairs
 from autonomus_datapipeline_spark.workloads.registry import (
     EVENTS_SPAN_SECONDS_BOUNDS,
     ORDER_TOTALPRICE_BOUNDS,
@@ -95,19 +96,17 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE expressions over exact counts — engine-identical without
     rounding.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    op = li.distinct()
     tot = op.agg(
         F.count_distinct("l_orderkey").cast("bigint").alias("n_orders")
     )
     sup = op.groupBy("l_partkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-    a = op.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a"))
-    b = op.select(F.col("l_orderkey").alias("ok2"), F.col("l_partkey").alias("part_b"))
     pairs = (
-        a.join(b, (a.ok == b.ok2) & (F.col("part_b") > F.col("part_a")))
-        .groupBy("part_a", "part_b")
+        copurchase_half_pairs(li)
+        .groupBy(F.col("src").alias("part_a"), F.col("dst").alias("part_b"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_ab"))
         .where(F.col("n_ab") >= _MBL_MIN_SUPPORT)
     )

@@ -716,53 +716,30 @@ def _lpa_round_sql(edges: str, prev: str, out: str) -> str:
     """
 
 
-_lpa_round_sql_ref = _lpa_round_sql
-
-# Production argmax form for the LPA family. tools/ab_bench.py flips this to
-# "window" for the interleaved A/B; both forms are value-identical.
-_LPA_ARGMAX = "hash"
-
-
-def _lpa_labels(
-    edges: DataFrame, rounds: int = 2, argmax: str | None = None
-) -> DataFrame:
+def _lpa_labels(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """``rounds`` semi-synchronous LPA rounds from identity labels over a
-    symmetric edge list (u, v). Both argmax forms are value-identical —
-    adopt the neighbor label with the highest count, ties to the SMALLEST
-    label — and both are registered here so tools/ab_bench.py can A/B them
-    in one session (r10 verdict: the hash rewrite's win was weather-suspect):
-
-    - ``"hash"``: max over a (count, -label) struct — a pure HASH aggregate
-      with map-side partial combine, no per-group sort.
-    - ``"window"``: row_number over (count DESC, label) per node — the
-      oracle's form; one sort per round.
+    symmetric edge list (u, v): each node adopts the neighbor label with
+    the highest count, ties to the SMALLEST label. The argmax is a max
+    over a (count, -label) struct — a pure HASH aggregate with map-side
+    partial combine and no per-group sort. It returns the same labels as
+    the oracle's row_number-over-(count DESC, label) window, which it
+    replaced after the r11 interleaved A/B (AB_r11.json) put it at or
+    under the window form.
     """
-    if argmax is None:
-        argmax = _LPA_ARGMAX
     labels = edges.select(F.col("u"), F.col("u").alias("label")).distinct()
     for _ in range(rounds):
         nb = edges.join(
             labels.select(F.col("u").alias("v"), "label"), "v"
         ).groupBy("u", "label").agg(F.count(F.lit(1)).alias("c"))
-        if argmax == "hash":
-            labels = (
-                nb.groupBy("u")
-                .agg(
-                    F.max(
-                        F.struct(F.col("c"), (-F.col("label")).alias("nl"))
-                    ).alias("m")
-                )
-                .select("u", (-F.col("m.nl")).alias("label"))
+        labels = (
+            nb.groupBy("u")
+            .agg(
+                F.max(
+                    F.struct(F.col("c"), (-F.col("label")).alias("nl"))
+                ).alias("m")
             )
-        else:
-            w = Window.partitionBy("u").orderBy(
-                F.desc("c"), F.asc("label")
-            )
-            labels = (
-                nb.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .select("u", "label")
-            )
+            .select("u", (-F.col("m.nl")).alias("label"))
+        )
     return labels
 
 
@@ -805,10 +782,6 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     edges = graph_common.copurchase_edges(spark, sf_dir, load=load_table).select(
         F.col("src").alias("u"), F.col("dst").alias("v")
     )
-    # hash-aggregate argmax (struct max, map-side combine): the r11
-    # interleaved canary-normalized A/B (tools/ab_bench.py, AB_r11.json)
-    # confirmed it at-or-under the window form within noise, so the r10
-    # regression was box weather, not the rewrite.
     labels = _lpa_labels(edges, rounds=2)
     sizes = labels.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members")
@@ -1586,8 +1559,8 @@ def trimmed_mean_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN intra i ON i.label = d.label
     CROSS JOIN t
     """.format(
-        lpa1=_lpa_round_sql_ref("edges", "l0", "l1"),
-        lpa2=_lpa_round_sql_ref("edges", "l1", "l2"),
+        lpa1=_lpa_round_sql("edges", "l0", "l1"),
+        lpa2=_lpa_round_sql("edges", "l1", "l2"),
     ),
 )
 def lpa_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1610,8 +1583,6 @@ def lpa_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = edges.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
-    # hash-aggregate argmax — A/B-confirmed vs the window form (see
-    # label_propagation_communities / tools/ab_bench.py).
     labels = _lpa_labels(edges, rounds=2)
     # Three downstream subtrees read the final labels (la, lb for the
     # intra-community edge count, plus the degree rollup) — without a
@@ -2847,19 +2818,6 @@ def jackknife_mean_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# r15 A/B switch (tools/ab_r15.py): "fold" (default, shipped) = prefix-sum
-# directly over raw slopes with unit weights; "hist" = the r13/r14 slope
-# value-histogram + cache shape, kept for the A/B. Interleaved A/Bs at
-# BOTH sf1 and sf0.1 picked fold decisively (AB_r15_theilsen_sf1.json:
-# med 3.14 vs 4.50, min 2.76 vs 4.27; AB_r15_theilsen_sf01.json: med 6.26
-# vs 8.88, min 3.37 vs 7.70): the histogram barely dedups (2.9M -> 2.4M
-# slope values), so its extra groupBy exchange + the cache's
-# InMemoryRelation AQE pin cost more than the 17% window-row reduction
-# they buy. Values identical (running count crosses n/2 at the same slope
-# value; proven by collect-equality and the oracle).
-_THEIL_SEN_FORM = "fold"
-
-
 @query(
     "theil_sen_daily_trend",
     oracle="""
@@ -2890,13 +2848,20 @@ def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     OLS slope (ols_revenue_trend_by_priority): up to 29% of days can be
     corrupted (outages, flash sales) without moving the estimate. Each
     pairwise slope is one IEEE division of decimal-exact day revenues;
-    the median uses the value-histogram method over the slope values
-    (identical double values group identically on both engines, and the
-    2·cum ≥ n threshold is the integer cross-multiplication).
+    the median is a prefix-sum over the raw slopes with unit weights:
+    the running count crosses n/2 at the same slope VALUE as the oracle's
+    value-histogram count (identical doubles sort identically on both
+    engines, and the 2·cum ≥ n threshold is an integer comparison).
+
+    Folding the slope histogram into the prefix-sum won interleaved
+    A/Bs at sf1 and sf0.1 (AB_r15_theilsen_sf1.json: median 3.14 vs
+    4.50 s; AB_r15_theilsen_sf01.json: 6.26 vs 8.88 s): the histogram
+    barely dedups (2.9M → 2.4M slope values at sf0.1), so its groupBy
+    exchange and cache cost more than the 17% of window rows they save.
 
     Scale: the pair join is CALENDAR²-bounded (days², never rows²) — the
     only reason Theil-Sen is computable at 100 TB is running it on the
-    pre-aggregated grid; the slope histogram then bounds the median scan.
+    pre-aggregated grid, which also bounds the median's prefix-sum.
     """
     o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
@@ -2913,33 +2878,13 @@ def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     slopes = a.join(b, F.col("bx") > F.col("ax")).select(
         ((F.col("by") - F.col("ay")) / (F.col("bx") - F.col("ax"))).alias("m")
     )
-    if _THEIL_SEN_FORM == "fold":
-        # r15 (shipped): skip the slope histogram and run the prefix-sum
-        # over raw slopes with unit weights — one fewer exchange, ~17%
-        # more window rows (2.9M vs 2.4M), no session-pinned cache. The
-        # running count crosses n/2 at the same slope VALUE either way,
-        # so the selected median element is identical.
-        cum = with_global_running(
-            slopes.select(F.col("m").alias("v")),
-            [("v", True)],
-            sums={"cum": F.lit(1)},
-            totals={"n": F.lit(1)},
-            materialize="localCheckpoint",
-        ).select("v", "cum", "n")
-    else:
-        hist = slopes.groupBy(F.col("m").alias("v")).agg(
-            F.count(F.lit(1)).cast("bigint").alias("c")
-        )
-        # materialize="cache": the histogram sits on a days²-bounded pair
-        # join — cheap to hold, expensive to recompute per prefix-sum
-        # branch.
-        cum = with_global_running(
-            hist,
-            [("v", True)],
-            sums={"cum": "c"},
-            totals={"n": "c"},
-            materialize="cache",
-        ).select("v", "cum", "n")
+    cum = with_global_running(
+        slopes.select(F.col("m").alias("v")),
+        [("v", True)],
+        sums={"cum": F.lit(1)},
+        totals={"n": F.lit(1)},
+        materialize="localCheckpoint",
+    ).select("v", "cum", "n")
     return cum.agg(
         F.max("n").cast("bigint").alias("n_pairs"),
         F.min(F.when(2 * F.col("cum") >= F.col("n"), F.col("v"))).alias(

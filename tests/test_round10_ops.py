@@ -205,6 +205,43 @@ def test_copurchase_edges_symmetric_distinct_with_degrees(spark, sf_dir):
     assert deg_check == 0
 
 
+def _pair_lineitem(spark):
+    # order 1: 7 parts plus a repeated (order, part) row; order 2: one part;
+    # order 3: a pair that order 1 also has, so edges must dedupe across orders
+    rows = [(1, p) for p in range(1, 8)] + [(1, 3), (2, 8), (3, 1), (3, 2)]
+    return spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
+
+
+def test_copurchase_half_pairs_count_is_sum_of_k_choose_2(spark):
+    li = _pair_lineitem(spark)
+    half = graph_common.copurchase_half_pairs(li)
+    per_order = {r["ok"]: r["n"] for r in half.groupBy("ok").agg(
+        F.count(F.lit(1)).alias("n")).collect()}
+    assert per_order == {1: 21, 3: 1}  # C(7, 2) over DISTINCT parts; no order 2
+    assert half.where(F.col("src") >= F.col("dst")).count() == 0
+    assert half.distinct().count() == 22
+
+
+def test_copurchase_edges_join_and_collect_builds_equal(spark):
+    li = _pair_lineitem(spark)
+
+    def load(_spark, _sf_dir, table):
+        assert table == "lineitem"
+        return li
+
+    def edge_set(build):
+        e = graph_common.copurchase_edges(
+            spark, "unused", with_degrees=True, load=load, build=build
+        )
+        return sorted(tuple(r) for r in e.select("src", "dst", "deg").collect())
+
+    joined = edge_set("join")
+    assert joined == edge_set("collect")
+    assert len(joined) == 2 * 21  # pair (1, 2) of order 3 is already in order 1
+    assert {(s, d) for s, d, _ in joined if s == 8 or d == 8} == set()
+    assert all(deg == 6 for s, _, deg in joined if s <= 7)
+
+
 # ---------------------------------------------------------------------------
 # fsum: floor-quantized sums are engine-deterministic and close to exact
 # ---------------------------------------------------------------------------

@@ -211,6 +211,30 @@ class TestClampAudit:
         assert audit["n_clamped"] == 1 and audit["n_rows"] == 11
         assert audit["bounds"] == (0.0, 9.0)
 
+    def test_audit_counts_uncastable_keys_as_clamped(self, spark, monkeypatch):
+        # A string key that try_cast("double") turns into NULL lands in the
+        # -2 sentinel bucket, where the prefix-sum goes serial: clamped.
+        from pyspark.sql import functions as F
+
+        from autonomus_datapipeline_spark.operators import prefix_sum as ps
+
+        monkeypatch.setenv(ps.CLAMP_AUDIT_ENV, "1")
+        monkeypatch.setattr(ps, "LAST_CLAMP_AUDIT", None)
+        df = spark.createDataFrame(
+            [(i, str(i)) for i in range(10)] + [(10, "n/a"), (11, None)],
+            "id long, k string",
+        )
+        ps.with_global_running(
+            df,
+            [("k", True), ("id", True)],
+            row_number="rn",
+            bucket_by=F.col("k"),
+            bounds=(0.0, 9.0),
+        ).collect()
+        audit = ps.LAST_CLAMP_AUDIT
+        assert audit["n_clamped"] == 1 and audit["n_uncastable"] == 1
+        assert audit["n_rows"] == 12
+
     def test_audit_off_by_default(self, spark, monkeypatch):
         from autonomus_datapipeline_spark.operators import prefix_sum as ps
 

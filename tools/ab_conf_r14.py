@@ -3,12 +3,13 @@
 partition sizing).
 
 Conf changes need a fresh SparkSession, so variants cannot interleave
-within one session like tools/ab_r14.py. Instead the variants alternate
-in BLOCKS (A B A B ...), each block a fresh session (stop + rebuild) with
-its own warm-up, and each query timed n_runs times per block with the
-block MINIMUM kept (host stalls on this box only ever inflate — min is
-the stall-robust statistic; medians are reported too). A CPU canary
-brackets every block so cross-block weather is visible.
+within one session the way in-process module-switch A/Bs do. Instead
+the variants alternate in BLOCKS (A B A B ...), each block a fresh
+session (stop + rebuild) with its own warm-up, and each query timed
+n_runs times per block with the block MINIMUM kept (host stalls on this
+box only ever inflate — min is the stall-robust statistic; medians are
+reported too). A CPU canary brackets every block so cross-block weather
+is visible.
 
 Usage:
   python tools/ab_conf_r14.py "k=v[,k=v]" [n_blocks] [query ...]

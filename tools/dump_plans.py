@@ -1,12 +1,22 @@
 #!/usr/bin/env python
-"""Dump formatted physical plans of the headline queries to PLANS.md —
-the explain-plan audit artifact (run at sf0.1)."""
+"""Dump formatted physical plans.
+
+    python tools/dump_plans.py [sf_dir]
+        the headline queries into PLANS.md — the explain-plan audit
+        artifact (run at sf0.1);
+    python tools/dump_plans.py [sf_dir] --out DIR --tag TAG query [...]
+        one ``DIR/<query>_<TAG>.txt`` per named query — run once with
+        ``--tag before`` on the parent tree and once with ``--tag after``
+        on the change to diff a change's plans.
+"""
 
 from __future__ import annotations
 
+import argparse
+import os
 import sys
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from autonomus_datapipeline_spark.session import get_spark  # noqa: E402
 from autonomus_datapipeline_spark.workloads import QUERY_REGISTRY  # noqa: E402
@@ -137,25 +147,44 @@ HEADLINE = [
 ]
 
 
+def _plan(spark, df) -> str:
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+
+
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
+    ap.add_argument("queries", nargs="*")
+    ap.add_argument("--out", help="directory for <query>_<tag>.txt files")
+    ap.add_argument("--tag", default="after")
+    args = ap.parse_intermixed_args()
+    if args.queries and not args.out:
+        ap.error("named queries need --out")
     spark = get_spark("plans")
     spark.sparkContext.setLogLevel("ERROR")
+    if args.out:
+        os.makedirs(args.out, exist_ok=True)
+        for name in args.queries:
+            plan = _plan(spark, QUERY_REGISTRY[name].fn(spark, args.sf_dir))
+            path = os.path.join(args.out, f"{name}_{args.tag}.txt")
+            with open(path, "w") as fh:
+                fh.write(plan)
+            print(f"wrote {path} ({len(plan)} chars)", flush=True)
+        return
     out = [
         "# PLANS — formatted physical plans of headline queries",
         "",
-        f"Generated by tools/dump_plans.py against {sf_dir}. Regenerate after",
+        f"Generated by tools/dump_plans.py against {args.sf_dir}. Regenerate after",
         "any operator change; tests/test_plans.py guards the key properties",
         "(pushdown, broadcast, no cartesian products).",
         "",
     ]
     for name in HEADLINE:
-        df = QUERY_REGISTRY[name].fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        plan = _plan(spark, QUERY_REGISTRY[name].fn(spark, args.sf_dir))
         out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
     with open("PLANS.md", "w") as fh:
         fh.write("\n".join(out))
