@@ -3,7 +3,8 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+value-hash). Both dicts list the registry in registration order;
+``tools/check_oracles.py`` runs the same comparison locally.
 
 All real logic lives in the ``autonomus_datapipeline_spark`` package; this
 module only adapts it to the driver contract.

@@ -5,11 +5,10 @@ Two tiers, per the 100 TB design brief:
 - **Exact brute-force cosine** (`cosine_topk`, `blocked_neardup_pairs`):
   the correctness baseline. Dot products run JVM-side with an exact decimal
   accumulator so results are bit-deterministic and oracle-checkable.
-- **LSH-bucketed ANN** (`rp_lsh_buckets` + `lsh_topk`): the scale path.
-  Random-hyperplane signatures computed in an Arrow-batched pandas UDF
-  (vectorized numpy matmul per batch), then candidates come from an equi-join
-  on the bucket — at 1000 executors this probes ~1/2^bits of the corpus per
-  query instead of all of it.
+- **LSH-bucketed ANN** (`lsh_topk_portable`): random-hyperplane signatures
+  over md5-derived literal planes, signs from exact decimal dots, then
+  candidates come from an equi-join on the bucket — at 1000 executors this
+  probes ~(bits+1)/2^bits of the corpus per query instead of all of it.
 """
 
 from __future__ import annotations
@@ -41,10 +40,6 @@ def dot_exact(a: Column, b: Column) -> Column:
 
 def norm_sq_exact(a: Column) -> Column:
     return dot_exact(a, a)
-
-
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("norm_sq", norm_sq_exact(F.col(vec_col)).cast("double"))
 
 
 def cosine_topk(
@@ -573,11 +568,11 @@ def lsh_topk_portable(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Deterministic twin of :func:`lsh_topk`: same bucket-join + Hamming-1
-    multi-probe + exact re-rank shape, but hyperplanes are md5-derived
-    literals and bucket signs use exact decimal dots — fully replayable in
-    ANSI SQL, so the whole ANN path gets a hard oracle check (the numpy
-    variant keeps the high-dim scale role; this one proves the semantics).
+    """Random-hyperplane LSH top-k: bucket both sides, join on the bucket
+    with Hamming-1 multi-probe (every bucket one bit flip from the query's
+    signature), then exact re-rank. Hyperplanes are md5-derived literals
+    and bucket signs use exact decimal dots, so the whole ANN path is
+    replayable in ANSI SQL and gets a hard oracle check.
     """
     n_bits = len(planes)
     qb = queries.select(
@@ -775,103 +770,6 @@ def ivf_topk_frozen(
         "cell_id int, cvec array<double>",
     )
     return _ivf_search(queries, corpus, k, cent, n_probe, vec_col, id_col)
-
-
-def rp_lsh_buckets(
-    df: DataFrame,
-    dim: int,
-    n_bits: int = 12,
-    seed: int = 42,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Random-hyperplane LSH bucket id per vector (the ANN scale path).
-
-    Arrow-batched pandas UDF: each batch is one numpy matmul against the
-    (n_bits × dim) hyperplane matrix — vectorized, no per-row Python. The
-    hyperplanes are derived deterministically from the seed so every executor
-    regenerates them identically (no broadcast needed for the matrix itself).
-    """
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema = schema + ", bucket int"
-
-    def add_bucket(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rng = np.random.default_rng(seed)
-        planes = rng.standard_normal((n_bits, dim))
-        weights = 1 << np.arange(n_bits)
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.assign(bucket=pd.Series([], dtype="int32"))
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy())
-            bits = (mat @ planes.T) > 0
-            pdf = pdf.copy()
-            pdf["bucket"] = (bits @ weights).astype("int32")
-            yield pdf
-
-    return df.mapInPandas(add_bucket, schema=out_schema)
-
-
-def lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    dim: int,
-    n_bits: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """ANN top-k: bucket both sides with the same hyperplanes, join on the
-    bucket, exact cosine re-rank within candidates.
-
-    vs brute force: candidates per query ≈ corpus / 2^n_bits (times recall
-    multiplier from multi-probe; single-probe here). The bucket join is a
-    plain equi-join → shuffle on a small int key, AQE-coalesced.
-    """
-    qb = rp_lsh_buckets(queries, dim, n_bits, vec_col=vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        "bucket",
-    )
-    # Multi-probe: also search every bucket at Hamming distance 1 from the
-    # query signature (flip each bit) — recall scales with probes at zero
-    # index cost, the standard LSH recall lever.
-    qb = qb.select(
-        "query_id",
-        "q_vec",
-        F.explode(
-            F.array(
-                F.col("bucket"),
-                *[
-                    F.col("bucket").bitwiseXOR(F.lit(1 << i))
-                    for i in range(n_bits)
-                ],
-            )
-        ).alias("bucket"),
-    )
-    cb = rp_lsh_buckets(corpus, dim, n_bits, vec_col=vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        "bucket",
-    )
-    cos = F.round(
-        dot_exact(F.col("q_vec"), F.col("c_vec")).cast("double")
-        / (
-            F.sqrt(norm_sq_exact(F.col("q_vec")).cast("double"))
-            * F.sqrt(norm_sq_exact(F.col("c_vec")).cast("double"))
-        ),
-        6,
-    )
-    scored = (
-        cb.join(F.broadcast(qb), "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
 
 
 # ---------------------------------------------------------------------------

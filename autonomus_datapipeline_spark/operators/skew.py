@@ -13,7 +13,7 @@ the physical distribution changes.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -41,21 +41,3 @@ def salted_count(
         partial.groupBy(*keys)
         .agg(F.sum("_partial").alias(count_alias))
     )
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    partial_aggs: list[Column],
-    final_aggs: list[Column],
-    n_salts: int = 16,
-) -> DataFrame:
-    """General two-phase aggregation for decomposable aggregates:
-    ``partial_aggs`` run per (keys, salt); ``final_aggs`` combine the
-    partials per keys. Caller guarantees algebraic decomposability
-    (sum/count/min/max — not exact median)."""
-    salt = F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(n_salts)).alias(
-        "_salt"
-    )
-    partial = df.select("*", salt).groupBy(*keys, "_salt").agg(*partial_aggs)
-    return partial.groupBy(*keys).agg(*final_aggs)

@@ -17,6 +17,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 CODEGEN_CACHE_ENTRIES = 2000
+# The directory that holds this package: Python workers get it on their
+# PYTHONPATH, so UDFs that import the package run whatever the caller's cwd.
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -52,6 +55,11 @@ def get_spark(
       the spread of JVM heap growth hides the cached classes' metaspace.
       2000 holds several such working sets, so one session can interleave
       the registry with the medallion layers without evicting either.
+    - ``spark.executorEnv.PYTHONPATH`` = PACKAGE_PARENT: a Python worker
+      starts in Spark's own working directory, so a UDF closure that
+      imports this package failed with ``ModuleNotFoundError`` whenever the
+      driver reached the package only through a ``sys.path`` insert from
+      another cwd. Spark appends the worker's inherited PYTHONPATH.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -75,6 +83,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
     )
     if extra_conf:
         for k, v in extra_conf.items():

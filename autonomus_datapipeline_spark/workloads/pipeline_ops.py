@@ -572,9 +572,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully oracle-checked: the hyperplanes are md5-derived literals shared
     with the oracle SQL and bucket signs come from exact-decimal dots, so
     the candidate sets (and therefore the approximate answer itself) are
-    engine-reproducible. The numpy pandas-UDF variant
-    (`operators/similarity.py:rp_lsh_buckets`) remains the high-dim scale
-    path and is covered by unit tests.
+    engine-reproducible.
 
     Scale: candidates per query ≈ corpus × (n_bits+1)/2^n_bits ≈ 11%; the
     bucket join is a plain int equi-join, AQE-coalesced.

@@ -261,9 +261,10 @@ def fsum(col: Column, alias: str, grain: float = 1e6) -> Column:
     multiply-by-10^scale then round) — on IEEE-noisy inputs (a price
     stored as 68423.459999999992) they occasionally disagree by one
     quantum, which downstream cancellation amplifies (the r8
-    ewma_daily_revenue red row; tools/strict_float_audit.py finds the
-    residue). FLOOR(x·grain) has no tie case and depends only on the IEEE
-    product both engines compute identically, so the per-row quantized
+    ewma_daily_revenue red row; the bit-exact verdict of
+    tools/check_oracles.py finds the residue). FLOOR(x·grain) has no tie
+    case and depends only on the IEEE product both engines compute
+    identically, so the per-row quantized
     units — and therefore the exact integer sum and its one double cast —
     are bit-identical by construction. Use for sums of true double
     PRODUCTS (x·y, r², value·weight); plain decimal-exact inputs keep
@@ -299,14 +300,6 @@ def descale6(dec_sum: Column) -> Column:
     return descale(dec_sum, 6)
 
 
-def sql_descale(expr: str, scale: int = 6) -> str:
-    """Oracle-side mirror of :func:`descale` (expr = a decimal sum)."""
-    return (
-        f"(CAST(CAST(({expr}) * CAST({10 ** scale} AS DECIMAL({scale + 1},0))"
-        f" AS DECIMAL(38,0)) AS DOUBLE) / 1e{scale})"
-    )
-
-
 def sql_dsum(expr: str, alias: str) -> str:
     """Oracle-side mirror of :func:`dsum` — identical descale + roundings.
     Parenthesized so callers may strip the alias and embed it in a larger
@@ -331,560 +324,16 @@ def sql_davg(expr: str, alias: str) -> str:
 # Driver contract surface
 # ---------------------------------------------------------------------------
 
-# Queries that already have a fully-green (rows+schema+hash) row in a driver
-# CORRECTNESS_r*.json snapshot. The driver's correctness file caps at 50 rows
-# taken in queries() iteration order, so we emit *unproven* queries first and
-# park the already-proven ones at the back of the dict. Newly-registered
-# queries are unproven by definition and therefore also land in the front
-# block (in registration order, after the older unproven ones).
-_DRIVER_PROVEN_ROWS: frozenset[str] = frozenset(
-    {
-        # CORRECTNESS_r03.json: hash_match == true (48 rows).
-        "contamination_ngram_overlap", "content_hash_split",
-        "dedup_apply_minhash", "dedup_cluster_size_stats",
-        "dedup_connected_components", "doc_fingerprints", "dup_span_strip",
-        "edit_distance_pairs", "embedding_centroid_dist",
-        "embedding_norm_stats", "incremental_dedup_new_batch",
-        "lang_id_stopword_voting", "local_supplier_volume",
-        "multimodal_decode_features", "multimodal_frame_sample",
-        "pii_redaction", "promo_revenue_ratio", "quality_filter_chain",
-        "range_join_value_bands", "repetition_scores",
-        "sequence_packing_bins", "simhash_hamming_dedup_first",
-        "simhash_hamming_pairs", "sql_text_revenue", "stratified_sample",
-        "text_cleaning", "text_quality_scores", "tfidf_top_keywords",
-        "token_count_regex", "token_rarity_scores", "trade_volume_pairs",
-        "udaf_group_median", "winnowing_fingerprints", "zonemap_pruned_scan",
-        # CORRECTNESS_r02.json: hash_match == true (49 rows).
-        "approx_aggregates", "array_agg_order_years",
-        "array_functions_suite", "asof_join_last_order",
-        "brand_quantity_lookup", "cube_event_stats",
-        "customer_set_ops", "dedup_exact", "dedup_keep_latest",
-        "distinct_counts", "embedding_neardup_pairs",
-        "event_type_hourly_stats", "events_hourly_user_counts",
-        "incremental_agg_merge", "json_props_extract", "lag_value_diff",
-        "market_segment_revenue", "minhash_lsh_pairs", "nation_region_rollup",
-        "ngram_jaccard_capped", "ngram_jaccard_top_pairs", "null_safe_join",
-        "order_priority_bucket", "orders_above_customer_avg",
-        "pivot_status_counts", "q1_pricing_summary", "quantity_percentiles",
-        "running_customer_spend", "salted_grouped_count",
-        "semi_anti_join_customers", "session_windows_30m", "ship_delay_bucket",
-        "simhash_fingerprints", "sliding_window_6h_1h", "stats_correlation",
-        "string_date_functions", "timeseries_gap_fill",
-        "top_orders_by_revenue", "topk_users_per_hour", "tumbling_window_1h",
-        "union_missing_columns", "unit_convert_anomaly", "upsert_latest_wins",
-        "value_histogram", "window_ranking_suite", "zscore_normalize",
-        # CORRECTNESS_r04.json: hash_match == true (49 of 50 rows; the one
-        # red row, token_length_histogram, had a DuckDB-HUGEINT oracle type
-        # bug — fixed in r5, left unproven here so it leads the r5 file).
-        "corpus_mix_sampling",
-        "doc_chunking_overlap", "embedding_int8_quantization",
-        "grouped_token_quantiles",
-        # hard_negative_mining: r4-proven but re-touched by the r7 ANN
-        # re-rank restructure — dropped here until driver re-proof (it
-        # rides _R7_TOUCHED at the front of the contract).
-        "scd2_user_value_history",
-        # CORRECTNESS_r05.json: hash_match == true (never folded in when
-        # r5 landed — rediscovered in r9; the r7/r8 judge accounting
-        # counted these rows as currently-valid proofs, and the
-        # touch-tracking discipline guarantees any of them whose plan had
-        # changed since r5 would appear in a _R*_TOUCHED list instead).
-        "bigram_collocations", "bpe_merge_candidates",
-        "content_defined_chunks", "embedding_gram_block",
-        "event_transition_matrix", "functional_dependency_audit",
-        "funnel_conversion", "hhi_supplier_concentration",
-        "k_anonymity_audit", "laspeyres_price_index",
-        "minhash_jaccard_error", "neardup_clustering_coefficient",
-        "neardup_triangle_count", "ngram_diversity_report",
-        "oov_rate_report", "prefix_blocking_histogram",
-        "q10_returned_item_customers", "q12_priority_shipping",
-        "q13_customer_order_distribution", "q15_top_supplier",
-        "q17_small_quantity_revenue", "q18_large_volume_customers",
-        "q19_disjunctive_revenue", "q21_sole_late_supplier",
-        "q22_idle_rich_customers", "q3_shipping_priority",
-        "q4_order_priority_check", "q6_forecast_revenue",
-        "q8_market_share", "referential_integrity_audit",
-        "rolling_1h_user_value", "sla_latency_quantiles",
-        "snapshot_diff_report", "sql_window_top_customers",
-        "stratified_kfold_assignment", "temperature_mix_weights",
-        "token_length_histogram",
-        # CORRECTNESS_r06.json: hash_match == true (50 rows sampled; only
-        # the 6 below remain untouched by the r7 prefix-sum/ANN
-        # restructure — the other 44 r6-proven names were re-touched in r7
-        # and led the r7 contract until re-proven).
-        "neardup_gate_admission", "q2_min_cost_supplier",
-        "q9_product_type_profit", "q11_important_stock",
-        "q16_supplier_part_counts", "q20_excess_stock_suppliers",
-        # CORRECTNESS_r07.json: hash_match == true (all 50 sampled rows —
-        # the r7-touched prefix-sum/ANN re-proof set plus the two new
-        # r7 queries). Names later re-touched in r8 are pulled back out
-        # via _R8_TOUCHED (a touched name never rides the verified tail).
-        "abc_part_classification", "ann_ivf_frozen_topk",
-        "ann_ivf_incremental_assign", "ann_ivf_portable_topk",
-        "ann_lsh_topk", "ann_mrr_report", "ann_recall_report",
-        "burrows_delta_stylometry", "categorical_encode",
-        "concordance_keyword_context", "countmin_heavy_hitters",
-        "cumulative_share_pareto80", "daily_revenue_peaks",
-        "domain_cap_sample", "dsir_importance_select",
-        "durbin_watson_trend_residuals", "embedding_cosine_topk",
-        "embedding_dim_clip_report", "event_bigram_support",
-        "event_trigram_support", "funnel_time_to_conversion",
-        "hard_negative_mining", "hazard_table_monthly",
-        "hits_copurchase_2iter", "interval_overlap_count",
-        "inverted_index_postings", "kendall_tau_b_qty_price",
-        "key_skew_gini", "knn_label_classifier",
-        "ks_two_sample_order_value", "label_propagation_communities",
-        "lm_score_quality_buckets", "mann_whitney_order_value",
-        "multimodal_payload_neardup", "order_value_decile_calibration",
-        "orders_yoy_growth", "pareto_frontier_orders",
-        "quality_threshold_filter", "quantile_normalize_deciles",
-        "reorder_interval_quantiles", "rfm_segmentation",
-        "robust_outlier_mad", "semdedup_cell_prune", "session_top_paths",
-        "sorted_neighborhood_pairs", "spearman_rho_qty_price",
-        "trending_users_report", "trimmed_mean_order_value",
-        "vocab_zipf_stats", "winnowing_match_pairs",
-        # CORRECTNESS_r08.json: hash_match == true (49 of 50 rows — the
-        # head of the never-driver-proven backlog; the one red row,
-        # ewma_daily_revenue, was a double->decimal cross-engine rounding
-        # divergence rewritten to all-integer weights in r9, so it stays
-        # unproven and leads the r9 contract). lpa_modularity_score and
-        # dbscan_grid_clusters were sampled AFTER their r8 plan rewrites
-        # (driver run postdates the r8/r8b commits), so these rows prove
-        # the current shapes.
-        "ab_conversion_ztest", "acf_hourly_events", "activity_streaks",
-        "anova_f_order_value", "bfs_hops_from_hub",
-        "bigram_lm_source_scores", "bm25_doc_ranking",
-        "boilerplate_coverage_scores", "chi_square_event_hour",
-        "churn_label_table", "cohort_ltv_matrix",
-        "copurchase_degree_histogram", "copurchase_pairs",
-        "covariate_balance_smd", "cuped_adjusted_ab",
-        "dbscan_grid_clusters", "degree_assortativity",
-        "distribution_drift_tvd", "embedding_centroid_drift",
-        "exp_decay_user_engagement", "flesch_reading_buckets",
-        "grid_epsilon_neighbors", "jaccard_knn_graph",
-        "kcore_peeling_summary", "kmeans_2iter_clusters",
-        "kmeans_elbow_inertia", "kmeans_silhouette_proxy",
-        "l_diversity_audit", "lpa_modularity_score", "market_basket_lift",
-        "markov_transition_accuracy", "monthly_priority_share_shift",
-        "near_time_duplicate_events", "new_vs_returning_revenue",
-        "ngram_containment_pairs", "ngram_novelty_decay",
-        "ols_price_quantity_fit", "ols_revenue_trend_by_priority",
-        "pagerank_copurchase", "retention_cohort_matrix",
-        "rolling_zscore_anomaly", "seasonal_naive_backtest",
-        "source_distinctive_terms_chi2", "source_token_tvd_matrix",
-        "table_profile_orders", "temporal_consistency_audit",
-        "twap_event_value", "wau_mau_rolling_ratio",
-        "weekday_seasonality_index",
-        # CORRECTNESS_r09.json: hash_match == true (all 50 rows — the
-        # entire never-proven backlog cleared, the r8 red row
-        # ewma_daily_revenue re-proven green after the integer-weights
-        # rewrite, and the r8/r9-touched names sampled here re-proven for
-        # their current shapes; duplicates with earlier blocks are
-        # re-proofs).
-        "ann_pq_adc_topk", "ann_pq_recall_report",
-        "benford_first_digit_audit", "bloom_filter_fpr_audit",
-        "bpe_encode_tokens", "chow_test_revenue_break",
-        "conformal_interval_calibration", "cramers_v_segment_priority",
-        "ewma_daily_revenue", "fellegi_sunter_part_linkage",
-        "hybrid_rrf_fusion", "ipf_raking_weights", "isotonic_calibration_fit",
-        "jackknife_mean_variance", "mcnemar_conversion_shift",
-        "minhash_gate_admission", "minhash_lsh_pr_report",
-        "mmr_diversified_topk", "partial_correlation_qty_price",
-        "poisson_rate_shift", "pps_systematic_sample",
-        "purchase_attribution_last_touch", "purchase_attribution_linear",
-        "shapley_channel_attribution", "t_closeness_audit",
-        "target_encode_oof", "token_budget_select", "unigram_viterbi_tokens",
-        "voptimal_histogram",
-        # r9 re-proofs of previously-touched names (their r9 rows postdate
-        # every r7/r8 plan change):
-        "theil_sen_daily_trend", "winsorized_mean_order_value",
-        "brown_forsythe_variance_test", "cusum_changepoint_daily_orders",
-        "trend_seasonal_decompose", "gini_revenue_concentration",
-        "market_basket_triples", "categorical_encode", "orders_yoy_growth",
-        "quality_threshold_filter", "sorted_neighborhood_pairs",
-        "vocab_zipf_stats", "lm_score_quality_buckets",
-        "quantile_normalize_deciles", "abc_part_classification",
-        "domain_cap_sample", "embedding_dim_clip_report",
-        "robust_outlier_mad", "key_skew_gini", "pareto_frontier_orders",
-        "dedup_keep_best_quality",
-    }
-)
-
-# CORRECTNESS_r10.json: hash_match == true (all 50 rows — the 12 r10-new
-# queries, the full _R10_TOUCHED re-proof set, and the oldest-proven tail
-# head). Kept as a separate frozenset because these rows postdate every
-# r8/r9/r10 plan touch: _DRIVER_VERIFIED unions them back AFTER the
-# touched-name subtraction.
-_R10_PROVEN_ROWS: frozenset[str] = frozenset(
-    {
-        "array_functions_suite", "bh_fdr_segment_tests",
-        "brown_double_smoothing_forecast", "char_entropy_buckets",
-        "conformal_interval_calibration", "cumulative_share_pareto80",
-        "cuped_adjusted_ab", "curation_pipeline_funnel",
-        "daily_revenue_peaks", "decision_stump_split",
-        "dedup_apply_minhash", "dedup_connected_components",
-        "dedup_keep_best_quality",
-        "durbin_watson_trend_residuals", "funnel_time_to_conversion",
-        "hazard_table_monthly", "hhi_supplier_concentration",
-        "hits_copurchase_2iter", "interval_overlap_count",
-        "kaplan_meier_second_order", "kcore_peeling_summary",
-        "kendall_tau_b_qty_price", "ks_two_sample_order_value",
-        "label_propagation_communities", "laspeyres_price_index",
-        "logistic_ipw_ate", "lpa_modularity_score",
-        "mann_whitney_order_value", "market_segment_revenue",
-        "naive_bayes_lang_classifier", "nation_region_rollup",
-        "ols_revenue_trend_by_priority", "order_priority_bucket",
-        "order_value_decile_calibration", "pagerank_copurchase",
-        "poisson_bootstrap_ci", "q1_pricing_summary",
-        "reorder_interval_quantiles", "rfm_segmentation",
-        "seq_ab_spending_monitor", "spearman_rho_qty_price",
-        "stats_correlation", "target_encode_oof", "top_orders_by_revenue",
-        "trending_users_report", "trimmed_mean_order_value",
-        "twap_event_value", "weighted_reservoir_sample",
-        "winnowing_match_pairs", "zorder_layout_audit",
-    }
-)
-# CORRECTNESS_r11.json: hash_match == true (all 50 rows — the 10 r11-new
-# queries led the file, followed by the full _R11_TOUCHED re-proof set and
-# the stalest r02/r03-vintage tail). Separate frozenset for the same reason
-# as _R10_PROVEN_ROWS: these rows postdate every touch through r11, so
-# _DRIVER_VERIFIED unions them back AFTER the touched-name subtraction.
-_R11_PROVEN_ROWS: frozenset[str] = frozenset(
-    {
-        "adamic_adar_link_prediction", "ams_f2_sketch",
-        "asof_next_error_latency", "asof_view_purchase_attribution",
-        "brown_double_smoothing_forecast", "contamination_ngram_overlap",
-        "content_hash_split", "dbscan_grid_clusters",
-        "dedup_cluster_size_stats", "dedup_exact", "doc_fingerprints",
-        "edit_distance_pairs", "embedding_neardup_pairs",
-        "grid_epsilon_neighbors", "hll_portable_cardinality",
-        "incremental_agg_merge", "incremental_dedup_new_batch",
-        "jl_projection_distortion", "kcore_peeling_summary",
-        "kmv_set_intersection", "label_propagation_communities",
-        "lang_id_stopword_voting", "local_supplier_volume",
-        "logistic_ipw_ate", "lpa_modularity_score", "minhash_lsh_pairs",
-        "multimodal_decode_features", "multimodal_frame_sample",
-        "neyman_allocation_plan", "ngram_jaccard_capped",
-        "ngram_jaccard_top_pairs", "pagerank_copurchase", "pii_redaction",
-        "ppjoin_prefix_filter_pairs", "quality_filter_chain",
-        "quantile_normalize_deciles", "range_join_value_bands",
-        "repetition_scores", "sequence_packing_bins", "simhash_fingerprints",
-        "simhash_hamming_dedup_first", "simhash_hamming_pairs",
-        "stratified_sample", "text_cleaning", "text_quality_scores",
-        "tfidf_top_keywords", "token_count_regex", "token_rarity_scores",
-        "upsert_latest_wins", "winnowing_fingerprints",
-    }
-)
-
-# CORRECTNESS_r12.json: hash_match == true (all 50 rows — the new ALS
-# family led the file, then the full _R12_TOUCHED re-proof set, then the
-# stalest r02/r03-vintage tail). Same post-touch union discipline as the
-# r10/r11 blocks.
-_R12_PROVEN_ROWS: frozenset[str] = frozenset(
-    {
-        'als_rank2_implicit', 'approx_aggregates', 'array_agg_order_years',
-        'asof_join_last_order', 'asof_next_error_latency',
-        'asof_view_purchase_attribution', 'brand_quantity_lookup',
-        'corpus_mix_sampling', 'cube_event_stats', 'customer_set_ops',
-        'dedup_keep_latest', 'distinct_counts', 'doc_chunking_overlap',
-        'dup_span_strip', 'embedding_centroid_dist',
-        'embedding_int8_quantization', 'embedding_norm_stats',
-        'event_type_hourly_stats', 'events_hourly_user_counts',
-        'grouped_token_quantiles', 'json_props_extract',
-        'kmv_set_intersection', 'lag_value_diff', 'neyman_allocation_plan',
-        'null_safe_join', 'orders_above_customer_avg',
-        'pivot_status_counts', 'promo_revenue_ratio',
-        'quantity_percentiles', 'running_customer_spend',
-        'salted_grouped_count', 'scd2_user_value_history',
-        'semi_anti_join_customers', 'session_windows_30m',
-        'ship_delay_bucket', 'sliding_window_6h_1h', 'sql_text_revenue',
-        'string_date_functions', 'timeseries_gap_fill',
-        'topk_users_per_hour', 'trade_volume_pairs', 'tumbling_window_1h',
-        'udaf_group_median', 'unigram_viterbi_tokens',
-        'union_missing_columns', 'unit_convert_anomaly', 'value_histogram',
-        'window_ranking_suite', 'zonemap_pruned_scan', 'zscore_normalize',
-    }
-)
-
-_DRIVER_PROVEN_ROWS = (
-    _DRIVER_PROVEN_ROWS
-    | _R10_PROVEN_ROWS
-    | _R11_PROVEN_ROWS
-    | _R12_PROVEN_ROWS
-)
-
-
-# Registry names with no driver CORRECTNESS_r*.json proof yet. The r10
-# driver run proved all 12 r10-new queries (curation_pipeline_funnel
-# included) — what remains unproven is exactly the queries REGISTERED this
-# round, which _contract_order detects as not-in-_DRIVER_PROVEN_ROWS.
-_NEVER_DRIVER_PROVEN: tuple[str, ...] = ()
-
-# Queries whose PLANS changed in round 8, plus the 7 r7-touched names the
-# r7 driver sample missed (their last driver proof predates the r7
-# prefix-sum restructure, so they stay out of _DRIVER_VERIFIED until
-# re-proven). They follow the never-proven backlog in the contract: a
-# rewritten query needs driver re-proof before its name re-enters
-# _DRIVER_VERIFIED.
-_R8_TOUCHED: tuple[str, ...] = (
-    # r7-touched, not sampled by the r7 driver (stale pre-r7 proof)
-    "theil_sen_daily_trend", "winsorized_mean_order_value",
-    "brown_forsythe_variance_test", "cusum_changepoint_daily_orders",
-    "trend_seasonal_decompose", "gini_revenue_concentration",
-    "market_basket_triples",
-    # r8 prefix-sum core change touches every with_global_* caller (the
-    # list below is machine-derived: every registry query whose analyzed
-    # plan contains the operator's internal columns): both bucket edges
-    # now clamp, and running-sum offsets stay NULL-distinguishing so an
-    # all-NULL local prefix inherits the lower-bucket sum (window-SUM
-    # semantics). ranked_head callers are NOT touched (window-free
-    # triangular rank, none of the changed machinery).
-    "categorical_encode", "orders_yoy_growth", "quality_threshold_filter",
-    "sorted_neighborhood_pairs", "vocab_zipf_stats",
-    "lm_score_quality_buckets", "quantile_normalize_deciles",
-    "abc_part_classification", "domain_cap_sample",
-    "embedding_dim_clip_report", "robust_outlier_mad", "key_skew_gini",
-    "pareto_frontier_orders", "daily_revenue_peaks", "trending_users_report",
-    "reorder_interval_quantiles", "funnel_time_to_conversion",
-    "interval_overlap_count", "cumulative_share_pareto80",
-    "rfm_segmentation", "order_value_decile_calibration",
-    "ks_two_sample_order_value", "mann_whitney_order_value",
-    "trimmed_mean_order_value", "hazard_table_monthly",
-    "spearman_rho_qty_price", "kendall_tau_b_qty_price",
-    "durbin_watson_trend_residuals",
-    # r8 plan changes: leak-free eager top-k (hits), window-based df cap +
-    # capped-table checkpoint (winnowing). lpa_modularity_score's r8
-    # rewrite was driver-proven in r08 (sampled via the backlog after the
-    # r8 commits), so it is NOT held back here.
-    "hits_copurchase_2iter", "winnowing_match_pairs",
-    # r8: CC consumers feed bucket stars instead of pairwise candidates
-    # (connectivity-identical, band-table-linear edge count); the star-loop
-    # dropped a redundant distinct+checkpoint
-    "dedup_connected_components", "dedup_apply_minhash",
-    "dedup_keep_best_quality",
-)
-
-# Queries whose PLANS changed in round 9 (same discipline: a rewritten
-# query needs driver re-proof before its name re-enters _DRIVER_VERIFIED).
-# ewma_daily_revenue (never-proven: its r8 row was red) and
-# brown_forsythe_variance_test (already r8-touched) were both rewritten
-# for cross-engine bit-exactness; listed for the record even though both
-# already ride the unproven front.
-_R9_TOUCHED: tuple[str, ...] = (
-    "ewma_daily_revenue", "brown_forsythe_variance_test",
-)
-
-# Queries whose PLANS were rewritten in round 10 (re-proof needed before
-# re-entering _DRIVER_VERIFIED): the CC-dedup family (array-side
-# signatures, fused symmetric stars, SQL-round contraction loop), the
-# co-purchase graph family (shared half-pair edge builder), the seven
-# float-drift queries hardened to bit-exact floor-quantized sums
-# (registry.fsum), and the two ADVICE-fix queries (NULLIF zero-fold guard,
-# conformal rank clamp).
-#
-# NOT individually re-queued: the r10 load_table fan-out (repartition of
-# under-split documents/embeddings scans) changes the SCAN LAYOUT of every
-# query over those tables. It is values-neutral by construction — a
-# round-robin exchange above the scan, and every registered query is
-# partitioning-deterministic per this module's determinism rules — and the
-# whole registry was re-proven after it landed by the builder's full
-# sf0.01 oracle sweep (0 failures) AND the 264/264 bit-exact
-# strict_float_audit, so queuing ~120 names for a values-neutral layout
-# change would only thrash the 50-row driver window.
-_R10_TOUCHED: tuple[str, ...] = (
-    "dedup_connected_components", "dedup_apply_minhash",
-    "dedup_keep_best_quality",
-    "pagerank_copurchase", "label_propagation_communities",
-    "kcore_peeling_summary", "lpa_modularity_score",
-    "array_functions_suite", "ols_revenue_trend_by_priority",
-    "cuped_adjusted_ab", "laspeyres_price_index", "stats_correlation",
-    "hhi_supplier_concentration", "twap_event_value",
-    "target_encode_oof", "conformal_interval_calibration",
-)
-
-# The live proven set: a name whose plan was re-touched this round loses
-# its proof until a driver row re-proves the rewritten shape — the
-# subtraction keeps the historical record above verbatim while
-# guaranteeing every touched name rides the unproven front of the
-# contract (and the hygiene test's proven-block invariant holds). Names
-# re-touched in an EARLIER round whose latest proof postdates that touch
-# were folded back in via the r09 proven block above.
-# Queries whose PLANS or VALUES changed in round 11 (re-proof needed
-# before re-entering _DRIVER_VERIFIED): brown's emit window now derives
-# from max(o_orderdate) (VALUES changed: 213 → 210 rows at sf0.01); the
-# logistic Newton step gained the singular-Hessian guard (plan changed,
-# values identical on non-degenerate data); the co-purchase edge builder
-# restored its per-(order, part) pre-distinct (values-neutral, AB_r11
-# perf fix — whole family re-queued per the r10 precedent); and two
-# light-scan queries opted out of the documents/embeddings fan-out
-# (values-neutral plan change, AB_r11 perf fix).
-_R11_TOUCHED: tuple[str, ...] = (
-    "brown_double_smoothing_forecast", "logistic_ipw_ate",
-    # shared edge-builder pre-distinct restore + _lpa_labels refactor
-    "label_propagation_communities", "lpa_modularity_score",
-    "pagerank_copurchase", "kcore_peeling_summary",
-    # load_table fan_out=False opt-outs
-    "dbscan_grid_clusters", "grid_epsilon_neighbors",
-    "quantile_normalize_deciles",
-)
-
-# Queries whose PLANS or VALUES changed in round 12 (re-proof needed before
-# re-entering _DRIVER_VERIFIED): the r11 ADVICE fixes — Neyman's squared
-# moment now accumulates in DECIMAL(38,0) (VALUES change at sf1 volumes:
-# the old LongType sum wrapped past 2^63; identical at sf0.01), KMV's exact
-# union/intersection counts moved from 48-bit hash prefixes to raw user_id
-# and Jaccard to integer floor division on both engines — and the two
-# asof_join-backed queries (the operator gained the salt_buckets branch;
-# their default path is plan-identical but the operator code changed, so
-# they re-queue per the touch discipline).
-_R12_TOUCHED: tuple[str, ...] = (
-    "neyman_allocation_plan", "kmv_set_intersection",
-    "asof_view_purchase_attribution", "asof_next_error_latency",
-    # oracle-only fix (r12 full-sf0.1 sweep finding): the DuckDB multi-
-    # piece vocab used half-open range(2, MAXP+2) = lengths 2..5 while
-    # Spark and the DP use 2..4; value-identical at sf0.001/sf0.01
-    # (verified old==new oracle output) but wrong at sf0.1. Re-queued so
-    # the driver re-proves against the corrected oracle.
-    "unigram_viterbi_tokens",
-)
-
-_DRIVER_VERIFIED: frozenset[str] = (
-    (
-        _DRIVER_PROVEN_ROWS
-        - frozenset(_R8_TOUCHED)
-        - frozenset(_R9_TOUCHED)
-        - frozenset(_R10_TOUCHED)
-    )
-    | (
-        # r9 rows postdate the r8/r9 touches they sampled — restore those
-        # names unless re-touched in r10.
-        frozenset(
-            {
-                "theil_sen_daily_trend", "winsorized_mean_order_value",
-                "brown_forsythe_variance_test",
-                "cusum_changepoint_daily_orders", "trend_seasonal_decompose",
-                "gini_revenue_concentration", "market_basket_triples",
-                "categorical_encode", "orders_yoy_growth",
-                "quality_threshold_filter", "sorted_neighborhood_pairs",
-                "vocab_zipf_stats", "lm_score_quality_buckets",
-                "quantile_normalize_deciles", "abc_part_classification",
-                "domain_cap_sample", "embedding_dim_clip_report",
-                "robust_outlier_mad", "key_skew_gini",
-                "pareto_frontier_orders", "ewma_daily_revenue",
-            }
-        )
-        - frozenset(_R10_TOUCHED)
-    )
-    # r10 rows postdate every r8/r9/r10 touch they sampled.
-    | _R10_PROVEN_ROWS
-) - frozenset(_R11_TOUCHED)
-# r11 rows postdate every touch through r11 (including every _R11_TOUCHED
-# name — all nine were sampled and re-proven green in CORRECTNESS_r11).
-# Queries whose PLANS or VALUES changed in round 13 (re-proof needed before
-# re-entering _DRIVER_VERIFIED): ALS was extended from one half-step to a
-# FULL alternation (new item half-step, new mse_half/mse_full output
-# columns — VALUES and SCHEMA changed) and its 2x2-solve products moved
-# from double·double to exact DECIMAL(19,0) products rounded once (the
-# in-code enforcement of the <2^53 caveat, r12 verdict tasks 1–3); the
-# other eleven are the static accumulator audit's decimal hardening
-# (AUDIT_ACCUMULATORS.md — the r11 neyman overflow class): plan-only
-# touches, values identical at every tested scale, each re-proven
-# against its oracle at sf0.01 after the change.
-_R13_TOUCHED: tuple[str, ...] = (
-    "als_rank2_implicit",
-    "logistic_ipw_ate", "naive_bayes_lang_classifier",
-    "char_entropy_buckets", "ipf_raking_weights", "voptimal_histogram",
-    "bh_fdr_segment_tests", "seq_ab_spending_monitor", "ams_f2_sketch",
-    "fellegi_sunter_part_linkage", "t_closeness_audit",
-    "neardup_clustering_coefficient",
-)
-
-_DRIVER_VERIFIED = (
-    (_DRIVER_VERIFIED | _R11_PROVEN_ROWS) - frozenset(_R12_TOUCHED)
-    # r12 rows postdate every touch through r12.
-    | _R12_PROVEN_ROWS
-) - frozenset(_R13_TOUCHED)
-
-
-def _latest_proof_round() -> dict[str, int]:
-    """name → newest CORRECTNESS_r*.json round with a green row for it,
-    parsed from the committed driver artifacts at the repo root. Lets the
-    verified tail rotate OLDEST proof first (the driver samples the front
-    50 per round; with 276 queries a full re-proof cycle is ~5 rounds, so
-    freshly-proven names must sink to the back). Empty dict when the
-    artifacts are absent (fresh clone without round history) — the tail
-    then keeps stable registry order."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if isinstance(row, dict) and row.get("hash_match"):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def _contract_order() -> list[str]:
-    """Registry names: never-driver-proven names first (the explicit
-    backlog, then any other name with no CORRECTNESS row ever — newly
-    registered queries land here by definition), then touched re-proof
-    names (newest round first: a stale proof outranks no proof at all, so
-    re-proofs queue BEHIND the never-proven), then the driver-proven tail,
-    OLDEST latest-proof first (so the 50-row driver window refreshes the
-    stalest vintage each round instead of re-proving last round's rows).
-    A touched name never rides the verified tail even if an older round
-    proved its pre-rewrite shape."""
-    names = list(QUERY_REGISTRY)
-    front: list[str] = []
-    for n in (
-        *(_n for _n in _NEVER_DRIVER_PROVEN if _n in QUERY_REGISTRY),
-        *(_n for _n in names if _n not in _DRIVER_PROVEN_ROWS),
-        *(
-            _n
-            for _n in (
-                *_R13_TOUCHED, *_R12_TOUCHED, *_R11_TOUCHED, *_R10_TOUCHED,
-                *_R9_TOUCHED, *_R8_TOUCHED,
-            )
-            if _n in QUERY_REGISTRY and _n not in _DRIVER_VERIFIED
-        ),
-    ):
-        if n not in front:
-            front.append(n)
-    tset = set(front)
-    rest_unproven = [
-        n for n in names
-        if n not in _DRIVER_VERIFIED and n not in tset
-    ]
-    proof_round = _latest_proof_round()
-    idx = {n: i for i, n in enumerate(names)}
-    verified = sorted(
-        (n for n in names if n in _DRIVER_VERIFIED and n not in tset),
-        key=lambda n: (proof_round.get(n, 0), idx[n]),
-    )
-    return front + rest_unproven + verified
-
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: QUERY_REGISTRY[name].fn for name in _contract_order()}
+    """Every registered query, in registration order."""
+    return {name: spec.fn for name, spec in QUERY_REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
+    """Oracle SQL of every query that has one, in registration order."""
     return {
-        name: QUERY_REGISTRY[name].oracle
-        for name in _contract_order()
-        if QUERY_REGISTRY[name].oracle is not None
+        name: spec.oracle
+        for name, spec in QUERY_REGISTRY.items()
+        if spec.oracle is not None
     }

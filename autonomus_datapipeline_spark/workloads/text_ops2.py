@@ -632,8 +632,6 @@ def burrows_delta_stylometry(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Character-level Shannon entropy as a corpus quality signal
 # ---------------------------------------------------------------------------
 
-_ENT_BAND_TENTHS = 10  # bands are 0.1-nat wide: band = floor(10H)
-
 _ENTROPY_ORACLE = """
 WITH pos AS (
     -- empty docs are excluded on BOTH engines: Spark's sequence(1, 0)

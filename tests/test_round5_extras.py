@@ -1076,27 +1076,22 @@ def test_temporal_audit_flags_backdated_ship(spark, monkeypatch):
 # ---------------------------------------------------------------------------
 
 
-def test_driver_verified_names_all_registered():
-    """Every name in the proven set must exist in the registry — a typo
-    here would silently park a NEW query behind the driver's 50-row
-    correctness window (never driver-checked) or re-emit a proven one."""
+def test_contract_lists_registry_in_registration_order():
+    """``queries()`` and ``oracle_sql()`` list every registered name in
+    registration order — the order the query modules are imported in, so
+    the contract starts with the TPC-H block."""
     from autonomus_datapipeline_spark.workloads import QUERY_REGISTRY
     from autonomus_datapipeline_spark.workloads.registry import (
-        _DRIVER_VERIFIED,
         oracle_sql,
         queries,
     )
 
-    unknown = _DRIVER_VERIFIED - set(QUERY_REGISTRY)
-    assert not unknown, f"_DRIVER_VERIFIED names not in registry: {unknown}"
     q = list(queries())
-    # unproven block strictly precedes the proven block
-    seen_proven = False
-    for name in q:
-        if name in _DRIVER_VERIFIED:
-            seen_proven = True
-        else:
-            assert not seen_proven, f"unproven {name} after proven block"
+    assert q == list(QUERY_REGISTRY)
+    assert q[0] == "q1_pricing_summary"
+    assert list(oracle_sql()) == [
+        n for n, spec in QUERY_REGISTRY.items() if spec.oracle is not None
+    ]
     # contract surfaces are complete and aligned
     assert set(q) == set(QUERY_REGISTRY)
     assert set(oracle_sql()) == set(QUERY_REGISTRY)

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Code lines per directory: non-blank lines holding a Python token, minus
 comments and module/class/function docstrings (ROADMAP aim 2's metric).
-Usage: python tools/code_lines.py [dir ...]; default: engine, workloads, tools"""
+Usage: python tools/code_lines.py [dir or file ...];
+default: engine, workloads, tools"""
 import ast, io, pathlib, sys, tokenize
 
 SKIP = {tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE, tokenize.INDENT,
@@ -26,4 +27,6 @@ def code_lines(src: str) -> int:
 
 for d in sys.argv[1:] or ["autonomus_datapipeline_spark",
                           "autonomus_datapipeline_spark/workloads", "tools"]:
-    print(f"{d}\t{sum(code_lines(p.read_text()) for p in pathlib.Path(d).rglob('*.py'))}")
+    path = pathlib.Path(d)
+    files = [path] if path.is_file() else path.rglob("*.py")
+    print(f"{d}\t{sum(code_lines(p.read_text()) for p in files)}")
