@@ -17,7 +17,7 @@ decimal accumulator (dsum / sql_dsum).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -657,6 +657,17 @@ def pareto_frontier_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PageRank over the co-purchase graph
 # ---------------------------------------------------------------------------
 
+
+def _checkpoint_observed(df: DataFrame, *metrics) -> tuple[DataFrame, dict]:
+    """Materialize ``df`` once with an eager localCheckpoint and return it
+    with the values of the aggregate ``metrics``, which an Observation
+    computes on that same job: a row count or an L1 total then costs no
+    job of its own and reaches later plans as a literal, not as a
+    broadcast of a computed aggregate."""
+    obs = Observation()
+    return df.observe(obs, *metrics).localCheckpoint(), obs.get
+
+
 _PR_ITERS = 3
 _PR_TOP = 30
 _PR_DAMP = 0.85
@@ -732,13 +743,12 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # ONE materialization of the pair fan-out, degrees attached
     # (graph_common.copurchase_edges: half-pair distinct + explode
-    # symmetrize + window degrees). Every other consumer (degree table,
-    # n-nodes scalar, rank init, final join) derives from these
-    # checkpointed in-memory blocks instead of re-executing the fan-out
-    # join+agg — cheaper than either recomputing deg per consumer (~4
-    # fan-out re-runs) or cache()ing deg (the InMemoryRelation pin
-    # defeats AQE on every consumer join; both shapes measured slower
-    # cold: 5.6/6.4 vs 4.1 s at sf0.1).
+    # symmetrize + window degrees). The degree table is checkpointed from
+    # these blocks once and its own job counts the nodes n, so rank init
+    # and every damped update read n as a literal instead of re-executing
+    # the fan-out join+agg or broadcasting a computed count (cache()ing
+    # deg instead pins an InMemoryRelation that defeats AQE on every
+    # consumer join: measured slower cold, 5.6/6.4 vs 4.1 s at sf0.1).
     edges = graph_common.copurchase_edges(
         # build="collect": this consumer is consistently ~10% faster on the
         # 2-exchange collect_set build across four interleaved A/Bs (r14+r15,
@@ -746,11 +756,13 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         # "join".
         spark, sf_dir, with_degrees=True, load=load_table, build="collect"
     )
-    deg = edges.select("src", "deg").distinct()
-    nn = deg.agg(F.count(F.lit(1)).cast("double").alias("n"))
-    pr = deg.crossJoin(F.broadcast(nn)).select(
-        F.col("src").alias("node"), (F.lit(1.0) / F.col("n")).alias("pr")
+    deg, seen = _checkpoint_observed(
+        edges.select("src", "deg").distinct(), F.count(F.lit(1)).alias("n")
     )
+    # An empty graph has n = 0 and no node to rank: NULLIF keeps the
+    # constant-folded 1/n from raising under ANSI division.
+    n = F.nullif(F.lit(float(seen["n"])), F.lit(0.0))
+    pr = deg.select(F.col("src").alias("node"), (F.lit(1.0) / n).alias("pr"))
     for _ in range(_PR_ITERS):
         # Integer picounit snap: floor never ties, so the quantization is
         # engine-identical (a DECIMAL(38,12) cast is not — HALF_UP vs
@@ -759,13 +771,12 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         contrib = F.floor(F.col("pr") / F.col("deg") * F.lit(1e12)).cast("long")
         pr = (
             edges.join(pr, edges.src == pr.node)
-            .crossJoin(F.broadcast(nn))
-            .groupBy(F.col("dst").alias("_dst"), "n")
+            .groupBy("dst")
             .agg(F.sum(contrib).cast("long").alias("s"))
             .select(
-                F.col("_dst").alias("node"),
+                F.col("dst").alias("node"),
                 (
-                    F.lit(0.15) / F.col("n")
+                    F.lit(0.15) / n
                     + F.lit(_PR_DAMP) * (F.col("s").cast("double") / F.lit(1e12))
                 ).alias("pr"),
             )
@@ -879,25 +890,12 @@ def hits_copurchase_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the edge list (distinct customer-part pairs, linear in the
     fact table) is checkpointed once; each half-step shuffles it against
     a |customers|- or |parts|-sized vector — the exact loop shape MLlib
-    uses for power iteration. The scalar L1 totals broadcast.
+    uses for power iteration. Each half-step's raw vector is checkpointed
+    once, and the Observation on that job carries its L1 total, so the
+    normalization is a projection with a literal: no total aggregate, no
+    broadcast cross join, no cache. The customer count comes the same way
+    from the distinct-customer checkpoint.
     """
-    out, cached = _hits_authority_plan(spark, sf_dir)
-    # Eagerly materialize the top-k (tiny) so every half-step cache can be
-    # released before returning: the tot-broadcast jobs populate the
-    # caches during this one action, exactly as they would under a lazy
-    # collect, so this adds no extra jobs.
-    out = out.localCheckpoint(eager=True)
-    for c in cached:
-        c.unpersist()
-    return out
-
-
-def _hits_authority_plan(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, list[DataFrame]]:
-    """The lazy HITS plan + its cache handles — split out so plan tests
-    can inspect the join structure that hits_copurchase_2iter's eager
-    checkpoint otherwise hides."""
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     be = (
@@ -906,62 +904,35 @@ def _hits_authority_plan(
         .distinct()
         .localCheckpoint()
     )
-    nc = be.agg(F.count_distinct("c").cast("bigint").alias("n"))
-    h = (
-        be.select("c")
-        .distinct()
-        .crossJoin(F.broadcast(nc))
-        .select("c", F.floor(F.lit(1e12) / F.col("n")).cast("bigint").alias("hq"))
+    cust, seen = _checkpoint_observed(
+        be.select("c").distinct(), F.count(F.lit(1)).alias("n")
     )
-    a = None
-    # Each half-step's raw vector is cache()d: its L1-total broadcast AND
-    # the next half-step both read it, and without the cache every tot
-    # build re-executes the whole upstream chain of join-aggregates (the
-    # re-execution compounds per half-step — measured ~4.0 s → ~2.5 s at
-    # sf0.1). Score vectors are |customers|/|parts|-sized — the same
-    # per-iteration persist MLlib's power iterations do. The handles are
-    # collected and unpersisted after the eager materialization below, so
-    # a long-lived session doesn't accumulate pinned InMemoryRelations
-    # across repeated invocations.
-    cached = []
-    for _ in range(2):
-        a_raw = (
-            be.join(h, "c")
-            .groupBy("p")
-            .agg(F.sum("hq").cast("bigint").alias("raw"))
-        ).cache()
-        cached.append(a_raw)
-        a_tot = a_raw.agg(F.sum("raw").alias("tot"))
-        a = a_raw.crossJoin(F.broadcast(a_tot)).select(
-            "p",
-            F.floor(F.col("raw").cast("double") / F.col("tot") * F.lit(1e12))
-            .cast("bigint")
-            .alias("aq"),
+    # NULLIF: with no customers there is nothing to score, and the
+    # constant-folded 1e12/0 would raise under ANSI division.
+    n = F.nullif(F.lit(seen["n"]), F.lit(0))
+    q = cust.select("c", F.floor(F.lit(1e12) / n).cast("bigint").alias("q"))
+    # Two iterations are the half-steps a1, h1, a2; the output reads a2.
+    for src, dst in (("c", "p"), ("p", "c"), ("c", "p")):
+        raw, seen = _checkpoint_observed(
+            be.join(q, src).groupBy(dst).agg(F.sum("q").cast("bigint").alias("raw")),
+            F.sum("raw").alias("tot"),
         )
-        h_raw = (
-            be.join(a, "p")
-            .groupBy("c")
-            .agg(F.sum("aq").cast("bigint").alias("raw"))
-        ).cache()
-        cached.append(h_raw)
-        h_tot = h_raw.agg(F.sum("raw").alias("tot"))
-        h = h_raw.crossJoin(F.broadcast(h_tot)).select(
-            "c",
-            F.floor(F.col("raw").cast("double") / F.col("tot") * F.lit(1e12))
+        q = raw.select(
+            dst,
+            F.floor(F.col("raw").cast("double") / F.lit(seen["tot"]) * F.lit(1e12))
             .cast("bigint")
-            .alias("hq"),
+            .alias("q"),
         )
-    out = (
-        ranked_head(a, [("aq", False), ("p", True)], _HITS_TOP, "rk")
+    return (
+        ranked_head(q, [("q", False), ("p", True)], _HITS_TOP, "rk")
         .select(
             F.col("p").alias("part"),
-            F.col("aq").alias("authority_q"),
-            (F.col("aq").cast("double") / F.lit(1e12)).alias("authority"),
+            F.col("q").alias("authority_q"),
+            (F.col("q").cast("double") / F.lit(1e12)).alias("authority"),
             "rk",
         )
         .orderBy("rk")
     )
-    return out, cached
 
 
 # ---------------------------------------------------------------------------

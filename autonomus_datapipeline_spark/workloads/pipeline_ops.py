@@ -2010,26 +2010,27 @@ def minhash_lsh_pr_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(jac >= F.lit(_MHPR_TAU))
         .select("doc_a", "doc_b")
     )
-    h = det.join(truth, ["doc_a", "doc_b"]).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hits")
+    # Both sides are distinct pairs, so one aggregate over their full outer
+    # join counts each side and the hits at once.
+    both = det.withColumn("in_det", F.lit(True)).join(
+        truth.withColumn("in_truth", F.lit(True)), ["doc_a", "doc_b"], "full"
     )
-    nd = det.agg(F.count(F.lit(1)).cast("bigint").alias("n_detected"))
-    nt = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
+    counts = both.agg(
+        F.count("in_truth").cast("bigint").alias("n_true"),
+        F.count("in_det").cast("bigint").alias("n_detected"),
+        F.count_if(F.col("in_det") & F.col("in_truth")).cast("bigint").alias("n_hits"),
+    )
     prec = F.col("n_hits").cast("double") / F.nullif(
         F.col("n_detected"), F.lit(0)
     )
     rec = F.col("n_hits").cast("double") / F.nullif(F.col("n_true"), F.lit(0))
-    return (
-        h.crossJoin(F.broadcast(nd))
-        .crossJoin(F.broadcast(nt))
-        .select(
-            F.lit(_MHPR_TAU).alias("tau"),
-            "n_true",
-            "n_detected",
-            "n_hits",
-            prec.alias("pair_precision"),
-            rec.alias("pair_recall"),
-        )
+    return counts.select(
+        F.lit(_MHPR_TAU).alias("tau"),
+        "n_true",
+        "n_detected",
+        "n_hits",
+        prec.alias("pair_precision"),
+        rec.alias("pair_recall"),
     )
 
 

@@ -21,11 +21,13 @@ both feed from the same registry.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -102,10 +104,70 @@ def query(name: str, oracle: str | None = None):
 _FAN_OUT_TABLES = frozenset({"documents", "embeddings"})
 
 
+# Session confs that steer how Parquet types map to Spark types when a
+# schema is inferred (``events`` sets the first). They are part of a
+# memoized schema's key: the same footer infers another schema under them.
+_PARQUET_TYPE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+# path -> (key, inferred StructType); one entry per path, so a rewritten
+# table replaces its entry instead of adding one.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _file_stamps(path: str) -> tuple | None:
+    """(name, size, st_mtime_ns) of every file under ``path``, or None when
+    ``os.stat`` cannot see it (an object-store URI such as ``s3a://``)."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((path, st.st_size, st.st_mtime_ns),)
+        stamps = []
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                name = os.path.join(root, f)
+                st = os.stat(name)
+                stamps.append((name, st.st_size, st.st_mtime_ns))
+        return tuple(sorted(stamps))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema once per file.
+
+    Inference reads the Parquet footers in a Spark job of its own. A repeated
+    read of unchanged files in one process reads with the schema the first
+    inferred, as :meth:`Catalog.read` does; the memo key is stated in
+    :func:`load_table`. A path ``os.stat`` cannot see always infers."""
+    stamps = _file_stamps(path)
+    if stamps is None:
+        return spark.read.parquet(path)
+    key = (stamps, tuple(spark.conf.get(k) for k in _PARQUET_TYPE_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, fan_out: bool | None = None
 ) -> DataFrame:
     """Parquet scan — columnar, so Catalyst prunes columns and pushes filters.
+
+    The schema is inferred once per file and process (:func:`_read_parquet`).
+    The memo key is the path, the (size, ``st_mtime_ns``) of every file
+    under it, and the session confs that steer the Parquet→Spark type
+    mapping (:data:`_PARQUET_TYPE_CONFS`, among them
+    ``spark.sql.legacy.parquet.nanosAsLong``), so a rewritten file or
+    another type mapping infers again.
 
     The driver's ``events`` table stores ``ts`` as Parquet TIMESTAMP(NANOS),
     which Spark has no native type for: we read nanos as long
@@ -127,7 +189,7 @@ def load_table(
         # the nanos→NTZ conversion below is built from an NTZ epoch literal
         # via timestampadd, which is session-TZ-independent by construction.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
         # idempotent: derived copies of the table may already carry a
         # converted timestamp column
         if dict(df.dtypes).get("ts") == "bigint":
@@ -139,7 +201,7 @@ def load_table(
                 ),
             )
         return df
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if fan_out is None:
         fan_out = name in _FAN_OUT_TABLES
     if fan_out:

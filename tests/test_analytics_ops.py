@@ -105,6 +105,20 @@ def test_pagerank_star_graph_hub_wins(spark, monkeypatch):
     assert out[0].pagerank > out[1].pagerank
 
 
+def test_graph_loops_rank_nothing_on_an_empty_graph(spark, monkeypatch):
+    """With no edges the node count is 0: the loops return no rows instead
+    of raising on the 1/n they fold into their plans."""
+    tables = {
+        "orders": spark.createDataFrame([], "o_orderkey long, o_custkey long"),
+        "lineitem": spark.createDataFrame([], "l_orderkey long, l_partkey long"),
+    }
+    monkeypatch.setattr(
+        analytics_ops, "load_table", lambda spark, sf, name, **kw: tables[name]
+    )
+    assert analytics_ops.pagerank_copurchase(spark, "unused").collect() == []
+    assert analytics_ops.hits_copurchase_2iter(spark, "unused").collect() == []
+
+
 # ---------------------------------------------------------------------------
 # Time-window dedup boundary
 # ---------------------------------------------------------------------------

@@ -37,10 +37,11 @@ def _compiles(spark, fn) -> int:
 def test_registry_mix_second_pass_reuses_generated_code(spark, sf_dir):
     """One pass compiles a few hundred classes; with a cache that held only
     100 of them, LRU eviction discarded each before the next pass reached it
-    and the second pass recompiled about as many as the first. The second
-    pass may compile a quarter of the first at most: what is left comes
-    from adaptive execution numbering a query's codegen stages in the
-    order its concurrent stages finish, which names a class differently."""
+    and the second pass recompiled about as many as the first. With class
+    names that carried the codegen stage id, which adaptive execution
+    assigns in the order a query's concurrent stages finish, a second pass
+    still compiled 24–32 classes at this scale. Without the id it compiles
+    0–3 (five sessions), all in ``hits_copurchase_2iter``."""
     def one_pass():
         for name in REGISTRY_MIX:
             spark.catalog.clearCache()
@@ -49,7 +50,7 @@ def test_registry_mix_second_pass_reuses_generated_code(spark, sf_dir):
 
     first = _compiles(spark, one_pass)
     second = _compiles(spark, one_pass)
-    assert second <= first / 4, (first, second)
+    assert second <= 8, (first, second)
 
 
 def test_medallion_rerun_compiles_only_the_bronze_timestamp(spark, tmp_path):

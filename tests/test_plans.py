@@ -424,26 +424,40 @@ def test_lpa_label_join_not_broadcast(spark, sf_dir):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
 
 
-def test_hits_broadcasts_only_scalar_totals(spark, sf_dir):
-    """The HITS half-steps shuffle the edge list against the score vector;
-    the only broadcasts are the 1-row L1 totals. Inspect the LAZY plan via
-    the internal builder — the query fn eagerly checkpoints its (tiny)
-    result so it can unpersist the half-step caches, which hides the join
-    structure behind a LogicalRDD scan."""
-    from autonomus_datapipeline_spark.workloads.analytics_ops import (
-        _hits_authority_plan,
-    )
+def test_hits_half_steps_take_totals_from_their_own_job(spark, sf_dir, monkeypatch):
+    """Each HITS half-step materializes its join-aggregate once, and the
+    Observation on that job carries the L1 total, so no half-step plan
+    joins a computed total back in (no CartesianProduct, no
+    BroadcastNestedLoopJoin). The customer count comes the same way from
+    the distinct-customer materialization. Every total handed on equals the
+    sum over the rows its own job materialized."""
+    from pyspark.sql import functions as F
 
-    lazy, cached = _hits_authority_plan(spark, sf_dir)
-    plan = lazy._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    for c in cached:
-        c.unpersist()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" in plan  # the 1-row scalar totals only
+    from autonomus_datapipeline_spark.telemetry import spark_jobs
+    from autonomus_datapipeline_spark.workloads import analytics_ops
+
+    real = analytics_ops._checkpoint_observed
+    steps = []
+
+    def spy(df, *metrics):
+        plan = df._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        (out, seen), jobs = spark_jobs(spark, lambda: real(df, *metrics))
+        steps.append((plan, out, seen, jobs))
+        return out, seen
+
+    monkeypatch.setattr(analytics_ops, "_checkpoint_observed", spy)
+    spark.catalog.clearCache()
+    QUERY_REGISTRY["hits_copurchase_2iter"].fn(spark, sf_dir).collect()
+
+    assert [sorted(seen) for _, _, seen, _ in steps] == [["n"], ["tot"], ["tot"], ["tot"]]
+    _, cust, seen, _ = steps[0]
+    assert seen["n"] == cust.count()
+    for plan, raw, seen, jobs in steps[1:]:
+        assert jobs >= 1
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert seen["tot"] == raw.agg(F.sum("raw")).first()[0]
 
 
 def test_bloom_filter_bits_broadcast(spark, sf_dir):

@@ -46,6 +46,8 @@ def test_hits_authority_ordering_bipartite_star(spark, monkeypatch):
     assert rows[0][1] > rows[1][1]  # authority_q strictly ordered
     assert rows[0][3] == 1 and rows[1][3] == 2
     assert 0.0 < sum(r[2] for r in rows) <= 1.0 + 1e-9
+    # the exact picounit scores of the cached, cross-joined-totals form
+    assert rows == [(10, 625000000000, 0.625, 1), (20, 375000000000, 0.375, 2)]
 
 
 # ---------------------------------------------------------------------------

@@ -12,6 +12,10 @@ same parquet tables, once each, and gives two verdicts per query:
   cell equal to the last bit. A query that drifts here passes the gate but
   would fail any stricter hash.
 
+The report's summary also lists as ``vacuous`` the queries whose check
+passed with 0 rows on both engines: they compared nothing at that scale.
+That list changes neither a verdict nor the exit code.
+
 Tables may be single parquet files (/root/testdata) or directories of part
 files (the sf1 build of tools/sf1_bench.py). Each run writes
 ORACLES_<sf>_<UTC time>_<pid>.json ({"summary", "queries"}) in the working
@@ -229,16 +233,21 @@ def main() -> int:
 
     failures = [n for n, r in report.items() if r["status"] == "FAIL"]
     drifted = [n for n, r in report.items() if r.get("drift_cells")]
+    # Both engines returned no rows: the check passed but compared nothing.
+    vacuous = [n for n, r in report.items() if r["status"] == "ok" and r["rows"] == 0]
     summary = {"sf_dir": sf_dir, "vanilla": vanilla, "n_queries": len(report),
                "n_fail": len(failures), "failures": failures,
-               "n_float_drift": len(drifted), "float_drift": drifted}
+               "n_float_drift": len(drifted), "float_drift": drifted,
+               "n_vacuous": len(vacuous), "vacuous": vacuous}
     stamp = _dt.datetime.now(_dt.timezone.utc).strftime("%Y%m%dT%H%M%SZ")
     out = f"ORACLES_{os.path.basename(sf_dir.rstrip('/'))}_{stamp}_{os.getpid()}.json"
     with open(out, "w") as fh:
         json.dump({"summary": summary, "queries": report}, fh, indent=1)
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else "")
           + f"; {len(drifted)} with float drift"
-          + (f": {drifted}" if drifted else "") + f" -> {out}")
+          + (f": {drifted}" if drifted else "")
+          + f"; {len(vacuous)} vacuous (0 rows on both)"
+          + (f": {vacuous}" if vacuous else "") + f" -> {out}")
     return 1 if failures else 0
 
 

@@ -8,6 +8,14 @@
         one ``DIR/<query>_<TAG>.txt`` per named query — run once with
         ``--tag before`` on the parent tree and once with ``--tag after``
         on the change to diff a change's plans.
+
+Each plan is headed by the query's Spark job count, from the status tracker
+with one job group per query: the jobs its function runs while building the
+DataFrame, plus the jobs of running that DataFrame once. In this fresh
+process the count includes one schema inference per table a query is the
+first to read (``registry.load_table``). A query that runs its loop eagerly
+and returns a checkpoint shows only a scan in its plan, so for it the count
+is what a before/after diff can compare.
 """
 
 from __future__ import annotations
@@ -19,6 +27,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from autonomus_datapipeline_spark.session import get_spark  # noqa: E402
+from autonomus_datapipeline_spark.telemetry import spark_jobs  # noqa: E402
 from autonomus_datapipeline_spark.workloads import QUERY_REGISTRY  # noqa: E402
 
 HEADLINE = [
@@ -155,6 +164,20 @@ def _plan(spark, df) -> str:
     )
 
 
+def _dump(spark, name: str, sf_dir: str) -> str:
+    """The query's job-count line followed by its formatted plan."""
+    spark.catalog.clearCache()
+    df, built = spark_jobs(spark, lambda: QUERY_REGISTRY[name].fn(spark, sf_dir))
+    plan = _plan(spark, df)
+    _, ran = spark_jobs(
+        spark, lambda: df.write.format("noop").mode("overwrite").save()
+    )
+    return (
+        f"Spark jobs: {built + ran} ({built} building the DataFrame,"
+        f" {ran} running it)\n\n{plan}"
+    )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
@@ -169,7 +192,7 @@ def main() -> None:
     if args.out:
         os.makedirs(args.out, exist_ok=True)
         for name in args.queries:
-            plan = _plan(spark, QUERY_REGISTRY[name].fn(spark, args.sf_dir))
+            plan = _dump(spark, name, args.sf_dir)
             path = os.path.join(args.out, f"{name}_{args.tag}.txt")
             with open(path, "w") as fh:
                 fh.write(plan)
@@ -184,7 +207,7 @@ def main() -> None:
         "",
     ]
     for name in HEADLINE:
-        plan = _plan(spark, QUERY_REGISTRY[name].fn(spark, args.sf_dir))
+        plan = _dump(spark, name, args.sf_dir)
         out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
     with open("PLANS.md", "w") as fh:
         fh.write("\n".join(out))
